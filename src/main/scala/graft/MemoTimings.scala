@@ -19,7 +19,7 @@ package graft
   * session is the honest figure; later re-records (a memo re-built after
   * cache eviction) must not overwrite it mid-snapshot. Entries of dead
   * applications are purged on the next record (one active SparkContext
-  * per JVM — the Corpus.frameCache discipline).
+  * per JVM — the [[SessionMemo]] discipline).
   */
 object MemoTimings {
   private val times =

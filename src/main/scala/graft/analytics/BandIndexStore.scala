@@ -246,8 +246,7 @@ object BandIndexStore {
   // so building once per session per dir and probing it yields exactly
   // the in-query formulation's pairs.
 
-  private val built =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), (String, String)]()
+  private val built = new graft.SessionMemo[String, (String, String)]
 
   /** Train on the full-corpus count + bulk-add the EXISTING (original)
     * docs into fresh temp store targets, once per (session, dir);
@@ -256,52 +255,35 @@ object BandIndexStore {
     * construction.
     */
   def ensureBuilt(s: SparkSession, d: String): (String, String) =
-    built.synchronized {
-      val app = s.sparkContext.applicationId
-      built.keySet.removeIf(_._1 != app)
-      val k = (app, d)
-      val got = built.get(k)
-      if (got != null) got
-      else {
-        val meta = java.nio.file.Files.createTempDirectory("graft-bidx-meta")
-          .toFile.getAbsolutePath
-        val bands = java.nio.file.Files.createTempDirectory("graft-bidx-bands")
-          .toFile.getAbsolutePath
-        train(s, Corpus.corpusDocCount(s, d), meta)
-        appendBatch(s,
-          Corpus.docsWithNearDups(s, d)
-            .filter(col("doc_id") < Corpus.VariantOffset)
-            .select("doc_id", "text"),
-          meta, bands, batchId = 1L)
-        built.put(k, (meta, bands))
-        (meta, bands)
-      }
+    built(s, d) {
+      val meta = java.nio.file.Files.createTempDirectory("graft-bidx-meta")
+        .toFile.getAbsolutePath
+      val bands = java.nio.file.Files.createTempDirectory("graft-bidx-bands")
+        .toFile.getAbsolutePath
+      train(s, Corpus.corpusDocCount(s, d), meta)
+      appendBatch(s,
+        Corpus.docsWithNearDups(s, d)
+          .filter(col("doc_id") < Corpus.VariantOffset)
+          .select("doc_id", "text"),
+        meta, bands, batchId = 1L)
+      (meta, bands)
     }
 
-  private val builtSigs =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+  private val builtSigs = new graft.SessionMemo[String, String]
 
   /** Bulk-add the EXISTING docs' signatures into a fresh temp sigs
     * target, once per (session, dir) — the [[ensureBuilt]] companion
     * for estimate-verification queries.
     */
   def ensureSigsBuilt(s: SparkSession, d: String): String =
-    builtSigs.synchronized {
-      val app = s.sparkContext.applicationId
-      builtSigs.keySet.removeIf(_._1 != app)
-      val k = (app, d)
-      val got = builtSigs.get(k)
-      if (got != null) got
-      else {
-        val sigs = java.nio.file.Files.createTempDirectory("graft-bidx-sigs")
-          .toFile.getAbsolutePath
-        appendSigs(s,
-          Corpus.docsWithNearDups(s, d)
-            .filter(col("doc_id") < Corpus.VariantOffset)
-            .select("doc_id", "text"),
-          sigs, batchId = 1L)
-        builtSigs.put(k, sigs)
-        sigs
-      }
+    builtSigs(s, d) {
+      val sigs = java.nio.file.Files.createTempDirectory("graft-bidx-sigs")
+        .toFile.getAbsolutePath
+      appendSigs(s,
+        Corpus.docsWithNearDups(s, d)
+          .filter(col("doc_id") < Corpus.VariantOffset)
+          .select("doc_id", "text"),
+        sigs, batchId = 1L)
+      sigs
     }
 }

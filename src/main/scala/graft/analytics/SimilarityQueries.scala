@@ -228,27 +228,21 @@ object SimilarityQueries {
   private[graft] val TrainedIters = 2
   private[graft] val TrainedNProbe = 3
 
-  private val centCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), Seq[(Int, Array[Long], Long)]]()
+  private val centsMemo = new graft.SessionMemo[String, Seq[(Int, Array[Long], Long)]]
 
-  private val boundsCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), Seq[(Int, Long, Long)]]()
+  private val boundsMemo = new graft.SessionMemo[String, Seq[(Int, Long, Long)]]
 
   /** Per-dimension corpus [min, max] SQ8 bounds, memoized per (session,
     * corpus) — the 64-row driver artifact sq8 / ivf_sq8 and their
     * ann_recall legs share (the trainedCents discipline).
     */
   private def sq8Bounds(s: SparkSession, d: String): Seq[(Int, Long, Long)] =
-    boundsCache.synchronized {
-      val app = s.sparkContext.applicationId
-      boundsCache.keySet.removeIf(_._1 != app)
-      boundsCache.computeIfAbsent((app, d), _ =>
-        Corpus.quantizedVectors(s, d)
-          .select(posexplode(col("qv")).as(Seq("i", "x")))
-          .groupBy("i").agg(min(col("x")).as("mn"), max(col("x")).as("mx"))
-          .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
-          .sortBy(_._1).toSeq)
-    }
+    boundsMemo(s, d)(
+      Corpus.quantizedVectors(s, d)
+        .select(posexplode(col("qv")).as(Seq("i", "x")))
+        .groupBy("i").agg(min(col("x")).as("mn"), max(col("x")).as("mx"))
+        .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
+        .sortBy(_._1).toSeq)
 
   /** Spherical trained centroids over the quantized corpus, memoized per
     * (session, corpus): training is deterministic and the artifact is k
@@ -258,13 +252,8 @@ object SimilarityQueries {
     */
   private[analytics] def trainedCents(s: SparkSession,
                            d: String): Seq[(Int, Array[Long], Long)] =
-    centCache.synchronized {
-      val app = s.sparkContext.applicationId
-      centCache.keySet.removeIf(_._1 != app)
-      centCache.computeIfAbsent((app, d), _ =>
-        Clustering.kmeansSpherical(s, Corpus.quantizedVectors(s, d),
-          TrainedK, TrainedIters))
-    }
+    centsMemo(s, d)(Clustering.kmeansSpherical(s, Corpus.quantizedVectors(s, d),
+      TrainedK, TrainedIters))
 
   /** Trained-IVF candidate pairs: spherical integer k-means
     * ([[Clustering.kmeansSpherical]]) as the coarse quantizer — cells
@@ -486,26 +475,21 @@ object SimilarityQueries {
     * chains unroll in SQL exactly like the spherical trainer's.
     */
   private[analytics] val PqTrainIters = 2
-  private val pqCbCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), Seq[Seq[Seq[Long]]]]()
+  private val pqCodebooks = new graft.SessionMemo[String, Seq[Seq[Seq[Long]]]]
   private[analytics] def pqTrainedCodebook(s: SparkSession, d: String): Seq[Seq[Seq[Long]]] =
     // memoized per (session, corpus): training is deterministic and the
     // codebook is 8×16×8 longs — ann_pq_trained and ann_recall's
     // pq_trained leg share one training run (the 8 × 2-iteration Lloyd
     // chains are ~30 tiny jobs; paying them once per session, not per
-    // query, is the Corpus.cached discipline for driver-side artifacts)
-    pqCbCache.synchronized {
-      val app = s.sparkContext.applicationId
-      pqCbCache.keySet.removeIf(_._1 != app)
-      pqCbCache.computeIfAbsent((app, d), _ =>
-        (0 until PqM).map { m =>
-          val sub = Corpus.quantizedVectors(s, d)
-            .select(col("vec_id"), expr(s"slice(qv, ${m * PqSub + 1}, $PqSub)").as("qv"))
-            .withColumn("nn", expr("aggregate(qv, 0L, (acc, x) -> acc + x * x)"))
-          Clustering.kmeansQuantized(s, sub, PqK, PqTrainIters)._1
-            .sortBy(_._1).map(_._2.toSeq).toSeq
-        })
-    }
+    // query)
+    pqCodebooks(s, d)(
+      (0 until PqM).map { m =>
+        val sub = Corpus.quantizedVectors(s, d)
+          .select(col("vec_id"), expr(s"slice(qv, ${m * PqSub + 1}, $PqSub)").as("qv"))
+          .withColumn("nn", expr("aggregate(qv, 0L, (acc, x) -> acc + x * x)"))
+        Clustering.kmeansQuantized(s, sub, PqK, PqTrainIters)._1
+          .sortBy(_._1).map(_._2.toSeq).toSeq
+      })
 
   private def pqPairs(s: SparkSession, d: String, kk: Int,
                       cb: Seq[Seq[Seq[Long]]]): DataFrame = {

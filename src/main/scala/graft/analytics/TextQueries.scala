@@ -63,8 +63,7 @@ object TextQueries {
   private final case class PerceptronModel(
       thr: Long, mean: Map[String, Long], iters: Seq[(Int, Long, Array[Long])])
 
-  private val perceptronCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), PerceptronModel]()
+  private val perceptronModels = new graft.SessionMemo[String, PerceptronModel]
 
   /** Raw per-doc integer text-stat features (the classifier's input
     * space, shared by the train and apply queries).
@@ -87,45 +86,41 @@ object TextQueries {
     */
   private def perceptronModel(s: org.apache.spark.sql.SparkSession,
                               d: String): PerceptronModel =
-    perceptronCache.synchronized {
-      val app = s.sparkContext.applicationId
-      perceptronCache.keySet.removeIf(_._1 != app)
-      perceptronCache.computeIfAbsent((app, d), _ => {
-        val raw = perceptronRaw(s, d)
-        val st = raw.agg(
-          count(lit(1)).as("n"),
-          sum("x_ttr").as("s_ttr"), sum("x_stop").as("s_stop"),
-          sum("x_len").as("s_len"), sum("x_tok").as("s_tok")).collect()(0)
-        val n = st.getLong(0)
-        val mean = PerceptronFeats.zipWithIndex
-          .map { case (c, i) => c -> st.getLong(i + 1) / n }.toMap
-        val thr = (2 * st.getLong(1) + st.getLong(2)) / n
-        val m2 = col("x_ttr") * 2 + col("x_stop") - lit(thr)
-        val featCols = "xb" +: PerceptronFeats
-        val feats = raw
-          .filter(abs(m2) >= PerceptronMargin)
-          .select(
-            when(m2 >= PerceptronMargin, 1L).otherwise(-1L).as("y") +:
-              lit(100L).as("xb") +:
-              PerceptronFeats.map(c => (col(c) - lit(mean(c))).as(c)): _*)
-          .cache()
-        var w = Array.fill(featCols.size)(0L)
-        val iters = (1 to PerceptronIters).map { t =>
-          val margin = featCols.zip(w)
-            .map { case (c, wi) => col(c) * lit(wi) }.reduce(_ + _)
-          val mis = col("y") * margin <= 0
-          val aggs = count(when(mis, 1)).as("nerr") +:
-            featCols.map(c =>
-              coalesce(sum(when(mis, col("y") * col(c))), lit(0L)).as(s"d_$c"))
-          val r = feats.agg(aggs.head, aggs.tail: _*).collect()(0)
-          val nerr = r.getLong(0)
-          val den = math.max(nerr, 1L) * t
-          w = w.indices.map(i => w(i) + r.getLong(i + 1) / den).toArray
-          (t, nerr, w.clone())
-        }
-        feats.unpersist()
-        PerceptronModel(thr, mean, iters)
-      })
+    perceptronModels(s, d) {
+      val raw = perceptronRaw(s, d)
+      val st = raw.agg(
+        count(lit(1)).as("n"),
+        sum("x_ttr").as("s_ttr"), sum("x_stop").as("s_stop"),
+        sum("x_len").as("s_len"), sum("x_tok").as("s_tok")).collect()(0)
+      val n = st.getLong(0)
+      val mean = PerceptronFeats.zipWithIndex
+        .map { case (c, i) => c -> st.getLong(i + 1) / n }.toMap
+      val thr = (2 * st.getLong(1) + st.getLong(2)) / n
+      val m2 = col("x_ttr") * 2 + col("x_stop") - lit(thr)
+      val featCols = "xb" +: PerceptronFeats
+      val feats = raw
+        .filter(abs(m2) >= PerceptronMargin)
+        .select(
+          when(m2 >= PerceptronMargin, 1L).otherwise(-1L).as("y") +:
+            lit(100L).as("xb") +:
+            PerceptronFeats.map(c => (col(c) - lit(mean(c))).as(c)): _*)
+        .cache()
+      var w = Array.fill(featCols.size)(0L)
+      val iters = (1 to PerceptronIters).map { t =>
+        val margin = featCols.zip(w)
+          .map { case (c, wi) => col(c) * lit(wi) }.reduce(_ + _)
+        val mis = col("y") * margin <= 0
+        val aggs = count(when(mis, 1)).as("nerr") +:
+          featCols.map(c =>
+            coalesce(sum(when(mis, col("y") * col(c))), lit(0L)).as(s"d_$c"))
+        val r = feats.agg(aggs.head, aggs.tail: _*).collect()(0)
+        val nerr = r.getLong(0)
+        val den = math.max(nerr, 1L) * t
+        w = w.indices.map(i => w(i) + r.getLong(i + 1) / den).toArray
+        (t, nerr, w.clone())
+      }
+      feats.unpersist()
+      PerceptronModel(thr, mean, iters)
     }
 
   /** Oracle-side replay of the batch-perceptron loop: the unrolled
@@ -194,41 +189,36 @@ object TextQueries {
   // ── BPE (r8): shared trainer for text_bpe_train / text_bpe_tokenize ──
   private val BpeK = 6
 
-  private val bpeRulesCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), Seq[(Int, String, Long)]]()
+  private val bpeRuleSets = new graft.SessionMemo[String, Seq[(Int, String, Long)]]
 
   /** The K merge rules, memoized per (session, corpus) — training is
     * deterministic, and the tokenize query applies the same rules the
     * train query emits (one driver row per iteration).
     */
   private def bpeRules(s: org.apache.spark.sql.SparkSession, d: String): Seq[(Int, String, Long)] =
-    bpeRulesCache.synchronized {
-      val app = s.sparkContext.applicationId
-      bpeRulesCache.keySet.removeIf(_._1 != app)
-      bpeRulesCache.computeIfAbsent((app, d), _ => {
-        var cur = Tables.documents(s, d)
-          .select(explode(split(col("text"), " ")).as("w"))
-          .groupBy("w").agg(count(lit(1)).as("cnt"))
-          .select(col("cnt"), bpeSymbolCol(col("w")).as("s"))
-        val rules = Seq.newBuilder[(Int, String, Long)]
-        for (it <- 1 to BpeK) {
-          val best = cur
-            .select(col("cnt"), expr(
-              """case when size(split(s, ' ')) >= 2
-                 then transform(sequence(1, size(split(s, ' ')) - 1),
-                        i -> concat(element_at(split(s, ' '), i), ' ',
-                                    element_at(split(s, ' '), i + 1)))
-                 else array() end""").as("ps"))
-            .select(col("cnt"), explode(col("ps")).as("pair"))
-            .groupBy("pair").agg(sum(col("cnt")).as("n"))
-            .orderBy(col("n").desc, col("pair")).limit(1)
-            .collect()(0)
-          val (pair, n) = (best.getString(0), best.getLong(1))
-          rules += ((it, pair, n))
-          cur = cur.withColumn("s", bpeReplaceCol(col("s"), pair))
-        }
-        rules.result()
-      })
+    bpeRuleSets(s, d) {
+      var cur = Tables.documents(s, d)
+        .select(explode(split(col("text"), " ")).as("w"))
+        .groupBy("w").agg(count(lit(1)).as("cnt"))
+        .select(col("cnt"), bpeSymbolCol(col("w")).as("s"))
+      val rules = Seq.newBuilder[(Int, String, Long)]
+      for (it <- 1 to BpeK) {
+        val best = cur
+          .select(col("cnt"), expr(
+            """case when size(split(s, ' ')) >= 2
+               then transform(sequence(1, size(split(s, ' ')) - 1),
+                      i -> concat(element_at(split(s, ' '), i), ' ',
+                                  element_at(split(s, ' '), i + 1)))
+               else array() end""").as("ps"))
+          .select(col("cnt"), explode(col("ps")).as("pair"))
+          .groupBy("pair").agg(sum(col("cnt")).as("n"))
+          .orderBy(col("n").desc, col("pair")).limit(1)
+          .collect()(0)
+        val (pair, n) = (best.getString(0), best.getLong(1))
+        rules += ((it, pair, n))
+        cur = cur.withColumn("s", bpeReplaceCol(col("s"), pair))
+      }
+      rules.result()
     }
 
   /** Word → bracketed character symbols ('<a> <b> ...'). */
@@ -324,8 +314,7 @@ object TextQueries {
     scores
   }
 
-  private val uniVocabCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), Seq[(String, Int, Long)]]()
+  private val uniVocabs = new graft.SessionMemo[String, Seq[(String, Int, Long)]]
 
   /** The trained vocab (piece, len, score): top-[[UniVocab]] multi-char
     * pieces under the (score DESC, piece) total order — one bounded
@@ -334,18 +323,14 @@ object TextQueries {
     */
   private def uniVocab(s: org.apache.spark.sql.SparkSession,
                        d: String): Seq[(String, Int, Long)] =
-    uniVocabCache.synchronized {
-      val app = s.sparkContext.applicationId
-      uniVocabCache.keySet.removeIf(_._1 != app)
-      uniVocabCache.computeIfAbsent((app, d), _ =>
-        uniScores(s, d)
-          .filter(length(col("piece")) >= 2)
-          .orderBy(col("score").desc, col("piece"))
-          .limit(UniVocab)
-          .select(col("piece"), length(col("piece")).cast("int").as("len"),
-            col("score"))
-          .collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2))).toSeq)
-    }
+    uniVocabs(s, d)(
+      uniScores(s, d)
+        .filter(length(col("piece")) >= 2)
+        .orderBy(col("score").desc, col("piece"))
+        .limit(UniVocab)
+        .select(col("piece"), length(col("piece")).cast("int").as("len"),
+          col("score"))
+        .collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2))).toSeq)
 
   /** Oracle CTEs: arcs + the unrolled EM rounds, yielding s0..s3 — the
     * SQL mirror of [[uniScores]].

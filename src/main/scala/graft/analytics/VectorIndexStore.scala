@@ -487,31 +487,22 @@ object VectorIndexStore {
         col("nn").as("na"), col("q_nn").as("nb"))
   }
 
-  private val builtPq =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), (String, String)]()
+  private val builtPq = new graft.SessionMemo[String, (String, String)]
 
   /** Train + bulk-add the full corpus at `d` into fresh temp PQ store
     * targets, once per (session, dir) — the [[ensureBuilt]] memo for
     * the `ann_ivf_pq_persisted` oracle query.
     */
   def ensureBuiltPq(s: SparkSession, d: String): (String, String) =
-    builtPq.synchronized {
-      val app = s.sparkContext.applicationId
-      builtPq.keySet.removeIf(_._1 != app)
-      val k = (app, d)
-      val got = builtPq.get(k)
-      if (got != null) got
-      else {
-        val meta = java.nio.file.Files.createTempDirectory("graft-vidx-pq-meta")
-          .toFile.getAbsolutePath
-        val codes = java.nio.file.Files.createTempDirectory("graft-vidx-pq-codes")
-          .toFile.getAbsolutePath
-        val base = Corpus.quantizedVectors(s, d)
-        trainPq(s, base, meta)
-        appendBatchPq(s, base, meta, codes, batchId = 1L)
-        builtPq.put(k, (meta, codes))
-        (meta, codes)
-      }
+    builtPq(s, d) {
+      val meta = java.nio.file.Files.createTempDirectory("graft-vidx-pq-meta")
+        .toFile.getAbsolutePath
+      val codes = java.nio.file.Files.createTempDirectory("graft-vidx-pq-codes")
+        .toFile.getAbsolutePath
+      val base = Corpus.quantizedVectors(s, d)
+      trainPq(s, base, meta)
+      appendBatchPq(s, base, meta, codes, batchId = 1L)
+      (meta, codes)
     }
 
   // ── per-(session, corpus) memoized build for the oracle query ──────
@@ -520,29 +511,20 @@ object VectorIndexStore {
   // codes), so building once per session per dir and searching it
   // yields exactly the in-query formulation's rows.
 
-  private val built =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), (String, String)]()
+  private val built = new graft.SessionMemo[String, (String, String)]
 
   /** Train + bulk-add the full corpus at `d` into fresh temp store
     * targets, once per (session, dir); returns (metaTarget, codesTarget).
     */
   def ensureBuilt(s: SparkSession, d: String): (String, String) =
-    built.synchronized {
-      val app = s.sparkContext.applicationId
-      built.keySet.removeIf(_._1 != app)
-      val k = (app, d)
-      val got = built.get(k)
-      if (got != null) got
-      else {
-        val meta = java.nio.file.Files.createTempDirectory("graft-vidx-meta")
-          .toFile.getAbsolutePath
-        val codes = java.nio.file.Files.createTempDirectory("graft-vidx-codes")
-          .toFile.getAbsolutePath
-        val base = Corpus.quantizedVectors(s, d)
-        train(s, base, meta)
-        appendBatch(s, base, meta, codes, batchId = 1L)
-        built.put(k, (meta, codes))
-        (meta, codes)
-      }
+    built(s, d) {
+      val meta = java.nio.file.Files.createTempDirectory("graft-vidx-meta")
+        .toFile.getAbsolutePath
+      val codes = java.nio.file.Files.createTempDirectory("graft-vidx-codes")
+        .toFile.getAbsolutePath
+      val base = Corpus.quantizedVectors(s, d)
+      train(s, base, meta)
+      appendBatch(s, base, meta, codes, batchId = 1L)
+      (meta, codes)
     }
 }

@@ -86,20 +86,15 @@ object RelationalQueries {
   /** Checkpointed (liDistinct, ownedFull) — shared (r17) by the rec full
     * face and the leave-last-out retrain, which previously each
     * re-derived their own copies (the lineitem distinct and ownership
-    * shuffles, twice per consumer under dual consumption). Action-running
-    * memo (localCheckpoint runs jobs), NOT Corpus.cached — checkpointed
-    * row RDDs beat a columnar persist for these consumed-a-few-times
-    * frames (measured: the persist variant cost ~2 s extra per build).
+    * shuffles, twice per consumer under dual consumption). Checkpointed
+    * row RDDs, not a Corpus.cached persist: they beat a columnar persist
+    * for these consumed-a-few-times frames (measured: the persist
+    * variant cost ~2 s extra per build).
     */
-  private val recBaseCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), (DataFrame, DataFrame)]()
+  private val recBases = new graft.SessionMemo[String, (DataFrame, DataFrame)]
 
-  private def recBase(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    val k = (s.sparkContext.applicationId, d)
-    val got = recBaseCache.get(k)
-    if (got != null) got
-    else {
-      recBaseCache.keySet.removeIf(_._1 != k._1)
+  private def recBase(s: SparkSession, d: String): (DataFrame, DataFrame) =
+    recBases(s, d) {
       val li = lineitem(s, d).select("l_orderkey", "l_partkey").distinct()
         .localCheckpoint(true)
       val owned = li
@@ -108,10 +103,8 @@ object RelationalQueries {
         .select(col("o_custkey").as("uid"), col("l_partkey").as("p"))
         .distinct()
         .localCheckpoint(true)
-      recBaseCache.putIfAbsent(k, (li, owned))
-      recBaseCache.get(k)
+      (li, owned)
     }
-  }
 
   private def recTop3(s: SparkSession, d: String): DataFrame =
     graft.analytics.Corpus.cachedTimed(s, d, "recTop3") {
@@ -187,72 +180,44 @@ object RelationalQueries {
     * join + coalesce at the consumer if needed). Also returns the
     * undirected degree table (n, deg) computed from the same edge list.
     */
-  /** The per-customer order-chain edge list (lag over the per-customer
-    * window — DEEP PATHS, the adversarial regime for label
-    * propagation) and its LSSS component labels, memoized per
-    * (session, sfDir) in the componentsCache pattern: the LSSS rounds
-    * run driver-side actions, so this is an action-running memo
-    * (ConcurrentHashMap + putIfAbsent), NOT a Corpus.cached build —
-    * graph_components and graph_modularity share ONE run.
-    */
   /** The directed purchase-SEQUENCE subgraph (graph_scc's construction)
     * plus its SCC labels and unresolved residue, memoized per (session,
-    * input) in the action-running-memo pattern (the SCC peel runs jobs):
-    * graph_scc, graph_condensation and graph_reciprocity share ONE
-    * build; Bench orders graph_scc first so the build lands in its slot.
+    * input): graph_scc, graph_condensation and graph_reciprocity share
+    * ONE build; Bench orders graph_scc first so the build lands in its
+    * slot.
     */
-  private val sccCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), (DataFrame, DataFrame, DataFrame)]()
+  private val sccs = new graft.SessionMemo[String, (DataFrame, DataFrame, DataFrame)]
 
   private def sccArtifacts(s: SparkSession, d: String)
-      : (DataFrame, DataFrame, DataFrame) = {
-    val k = (s.sparkContext.applicationId, d)
-    val got = sccCache.get(k)
-    if (got != null) got
-    else {
-      sccCache.keySet.removeIf(_._1 != k._1)
-      // timed → the bench "artifacts" block: the peel is the classic
-      // once-per-session build whose cost min-over-passes would hide
-      val built = graft.MemoTimings.timed(k._1, "sccArtifacts") {
-        val li = lineitem(s, d)
-          .select("l_orderkey", "l_linenumber", "l_partkey")
-          .filter(col("l_partkey") % 30 === 0)
-        val e = li.as("a").join(li.as("b"),
-            col("a.l_orderkey") === col("b.l_orderkey") &&
-              col("a.l_linenumber") < col("b.l_linenumber") &&
-              col("a.l_partkey") =!= col("b.l_partkey"))
-          .select(col("a.l_partkey").as("u"), col("b.l_partkey").as("v"))
-          .distinct().localCheckpoint(true)
-        val (labels, unresolved) =
-          graft.analytics.GraphOps.stronglyConnectedComponents(e)
-        (e, labels, unresolved)
-      }
-      sccCache.putIfAbsent(k, built)
-      sccCache.get(k)
-    }
-  }
+      : (DataFrame, DataFrame, DataFrame) =
+    // timed → the bench "artifacts" block: the peel is the classic
+    // once-per-session build whose cost min-over-passes would hide
+    sccs(s, d)(graft.MemoTimings.timed(s.sparkContext.applicationId, "sccArtifacts") {
+      val li = lineitem(s, d)
+        .select("l_orderkey", "l_linenumber", "l_partkey")
+        .filter(col("l_partkey") % 30 === 0)
+      val e = li.as("a").join(li.as("b"),
+          col("a.l_orderkey") === col("b.l_orderkey") &&
+            col("a.l_linenumber") < col("b.l_linenumber") &&
+            col("a.l_partkey") =!= col("b.l_partkey"))
+        .select(col("a.l_partkey").as("u"), col("b.l_partkey").as("v"))
+        .distinct().localCheckpoint(true)
+      val (labels, unresolved) =
+        graft.analytics.GraphOps.stronglyConnectedComponents(e)
+      (e, labels, unresolved)
+    })
 
   // ── shared HyperBall artifacts (graph_anf / graph_hyperball_radii):
   // the 4-round register propagation is the family's once-per-session
   // build — memoized (checkpointed per-node estimates) with its cost
   // recorded for the bench "artifacts" block.
-  private val anfCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), DataFrame]()
-  private def anfArtifacts(s: SparkSession, d: String): DataFrame = {
-    val k = (s.sparkContext.applicationId, d)
-    val got = anfCache.get(k)
-    if (got != null) got
-    else {
-      anfCache.keySet.removeIf(_._1 != k._1)
-      val built = graft.MemoTimings.timed(k._1, "anfArtifacts") {
-        graft.analytics.GraphOps.anfPerNode(
-          graft.analytics.GraphArtifacts.undFiltered(s, d), 4)
-          .localCheckpoint(true)
-      }
-      anfCache.putIfAbsent(k, built)
-      anfCache.get(k)
-    }
-  }
+  private val anfs = new graft.SessionMemo[String, DataFrame]
+  private def anfArtifacts(s: SparkSession, d: String): DataFrame =
+    anfs(s, d)(graft.MemoTimings.timed(s.sparkContext.applicationId, "anfArtifacts") {
+      graft.analytics.GraphOps.anfPerNode(
+        graft.analytics.GraphArtifacts.undFiltered(s, d), 4)
+        .localCheckpoint(true)
+    })
 
   /** Shared HyperBall oracle CTE chain: the w>=2 co-purchase graph,
     * sparse registers unrolled 4 rounds, and per-hop per-node ball
@@ -343,23 +308,17 @@ object RelationalQueries {
   /** Per-user leave-last-out hit ranks (uid, hit_rank ∈ {1..3, null}) —
     * the rec_hitrate eval frame: holdout selection, the leakage-safe
     * TRAIN-split retrain through [[recTop3Pipeline]], and the eval join,
-    * memoized per (session, input) in the action-running-memo pattern
-    * (the build runs localCheckpoint jobs). Pass 1 of a bench run pays
-    * the retrain in rec_hitrate's slot; later passes time warm — the
+    * memoized per (session, input). Pass 1 of a bench run pays the
+    * retrain in rec_hitrate's slot; later passes time warm — the
     * recTop3/triCommon attribution discipline.
     */
-  private val recHitRanksCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
+  private val recHitRankFrames = new graft.SessionMemo[String, DataFrame]
 
-  private def recHitRanks(s: SparkSession, d: String): DataFrame = {
-    val k = (s.sparkContext.applicationId, d)
-    val got = recHitRanksCache.get(k)
-    if (got != null) got
-    else {
-      recHitRanksCache.keySet.removeIf(_._1 != k._1)
-      // timed → the bench "artifacts" block (the leakage-safe retrain is
-      // the other once-per-session cost min-over-passes hid in r15)
-      graft.MemoTimings.timed(k._1, "recHitRanks") {
+  private def recHitRanks(s: SparkSession, d: String): DataFrame =
+    // timed → the bench "artifacts" block (the leakage-safe retrain is
+    // the other once-per-session cost min-over-passes hid in r15)
+    recHitRankFrames(s, d)(graft.MemoTimings.timed(s.sparkContext.applicationId,
+        "recHitRanks") {
       // INCREMENTAL train split (r17): the retrain previously re-ran the
       // full lineitem pair self-join and the full ownership distinct over
       // trainLi — 98% of which is identical to the full-face artifacts,
@@ -439,14 +398,16 @@ object RelationalQueries {
         .groupBy(held("uid")).agg(min("rank").as("hit_rank"))
         .localCheckpoint(true)
       sc0.setJobDescription(null)
-      recHitRanksCache.putIfAbsent(k, built)
-      } // MemoTimings.timed
-      recHitRanksCache.get(k)
-    }
-  }
+      built
+    })
 
-  private val chainLabelsCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
+  /** The per-customer order-chain edge list (lag over the per-customer
+    * window — DEEP PATHS, the adversarial regime for label
+    * propagation) and its LSSS component labels, memoized per
+    * (session, sfDir): graph_components and graph_modularity share ONE
+    * run.
+    */
+  private val chainLabelFrames = new graft.SessionMemo[String, DataFrame]
 
   private def chainEdges(s: SparkSession, d: String): DataFrame = {
     val w = Window.partitionBy("o_custkey").orderBy("o_orderkey")
@@ -456,18 +417,9 @@ object RelationalQueries {
       .select(col("prev").as("doc_a"), col("o_orderkey").as("doc_b"))
   }
 
-  private def chainLabels(s: SparkSession, d: String): DataFrame = {
-    val k = (s.sparkContext.applicationId, d)
-    val got = chainLabelsCache.get(k)
-    if (got != null) got
-    else {
-      chainLabelsCache.keySet.removeIf(_._1 != k._1)
-      val (labels, _) = graft.analytics.DedupQueries
-        .connectedComponentsLSSS(chainEdges(s, d))
-      chainLabelsCache.putIfAbsent(k, labels.persist())
-      chainLabelsCache.get(k)
-    }
-  }
+  private def chainLabels(s: SparkSession, d: String): DataFrame =
+    chainLabelFrames(s, d)(graft.analytics.DedupQueries
+      .connectedComponentsLSSS(chainEdges(s, d))._1.persist())
 
   /** The shared degree-oriented edge-iterator intersection stage: per
     * oriented edge s→t (oriented from the (degree, id)-smaller
@@ -7398,25 +7350,25 @@ object RelationalQueries {
         // per-threshold results are byte-identical to the sequential run
         val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
         val ec = scala.concurrent.ExecutionContext.fromExecutorService(pool)
-        val futs = Seq(1L, 2L, 3L, 5L).map { t =>
-          scala.concurrent.Future {
-            val et = e.filter(col("w") >= t)
-            val labs = graft.analytics.DedupQueries.connectedComponents(
-              et.select(col("u").as("doc_a"), col("v").as("doc_b")))
-            val comps = labs.groupBy("label").agg(count(lit(1)).as("sz"))
-            et.agg(count(lit(1)).as("n_edges"))
-              .crossJoin(comps.agg(
-                coalesce(sum("sz"), lit(0L)).as("n_active"),
-                count(lit(1)).as("n_components"),
-                coalesce(max("sz"), lit(0L)).as("giant_size")))
-              .select(lit(t).as("thr"), col("n_active"), col("n_edges"),
-                col("n_components"), col("giant_size"))
-          }(ec)
-        }
-        val rows = futs.map(f => scala.concurrent.Await.result(
-          f, scala.concurrent.duration.Duration.Inf))
-        pool.shutdown()
-        rows.reduce(_ unionByName _)
+        try {
+          val futs = Seq(1L, 2L, 3L, 5L).map { t =>
+            scala.concurrent.Future {
+              val et = e.filter(col("w") >= t)
+              val labs = graft.analytics.DedupQueries.connectedComponents(
+                et.select(col("u").as("doc_a"), col("v").as("doc_b")))
+              val comps = labs.groupBy("label").agg(count(lit(1)).as("sz"))
+              et.agg(count(lit(1)).as("n_edges"))
+                .crossJoin(comps.agg(
+                  coalesce(sum("sz"), lit(0L)).as("n_active"),
+                  count(lit(1)).as("n_components"),
+                  coalesce(max("sz"), lit(0L)).as("giant_size")))
+                .select(lit(t).as("thr"), col("n_active"), col("n_edges"),
+                  col("n_components"), col("giant_size"))
+            }(ec)
+          }
+          futs.map(f => scala.concurrent.Await.result(
+            f, scala.concurrent.duration.Duration.Inf)).reduce(_ unionByName _)
+        } finally pool.shutdown()
       },
       Some {
         val sb = new StringBuilder("""
