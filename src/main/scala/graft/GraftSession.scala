@@ -24,7 +24,8 @@ object GraftSession {
   // comes from build.sbt's -Xmx javaOption (SPARK_DRIVER_MEM env).
 
   def local(appName: String = "graft"): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val s = tune(SparkSession.builder()
       .appName(appName)
       .master(s"local[$cpus]")

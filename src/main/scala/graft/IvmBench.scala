@@ -2,13 +2,14 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.streaming.CdcStream
 
 /** Throughput of the streaming incremental-view-maintenance path
-  * (SURVEY §2.11 T11): the same synthetic CDC log as [[ThroughputBench]]
+  * (SURVEY §2.11 T11): a synthetic CDC log ([[IvmBench.synthCdcLog]])
   * driven through `statefulAggDeltas` (per-key LWW state machine →
   * signed retract/assert feed) chained into `maintainedAggView` (the
   * streaming SUM), multi-batch so state-store round trips are in the
@@ -19,6 +20,24 @@ import graft.streaming.CdcStream
   * Run: sbt "runMain graft.IvmBench [nEvents] [nBatches]"
   */
 object IvmBench {
+
+  /** Synthetic CDC log: 10% tombstones, keys drawn from an n/3 hot space
+    * (so compaction, the merge, and state transitions all do real work),
+    * written as the same JSON the file source reads in production shape.
+    */
+  private def synthCdcLog(spark: SparkSession, dir: String, n: Int, parts: Int): Unit =
+    spark.range(n).select(
+      concat(lit("e"), col("id")).as("eventID"),
+      when(col("id") % 10 === 0, "REMOVE").otherwise("MODIFY").as("eventName"),
+      timestamp_millis(lit(1704067200000L) + col("id")).as("approxCreationTs"),
+      lpad(col("id").cast("string"), 12, "0").as("sequenceNumber"),
+      concat(lit("k"), pmod(col("id") * 2654435761L, lit(n / 3 + 1))).as("keys"),
+      when(col("id") % 10 === 0, lit(null).cast("string"))
+        .otherwise(concat(lit("img"), col("id"))).as("newImage"),
+      lit(null).cast("string").as("oldImage"))
+      .coalesce(parts)
+      .write.mode("overwrite").json(dir)
+
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(1000000)
     val batches = args.drop(1).headOption.map(_.toInt).getOrElse(8)
@@ -35,7 +54,7 @@ object IvmBench {
 
     val dir = Files.createTempDirectory("ivm-in").toFile.getAbsolutePath
     val ckpt = Files.createTempDirectory("ivm-ckpt").toFile.getAbsolutePath
-    ThroughputBench.synthCdcLog(spark, dir, n, parts = batches * 4)
+    synthCdcLog(spark, dir, n, parts = batches * 4)
 
     // group = last key digit (10 groups), measure = image length
     val group = expr("substring(keys, -1, 1)")

@@ -7,7 +7,8 @@ import org.apache.spark.sql.functions._
 import graft.streaming.SnapshotStore
 
 /** Read-amplification measurement for the merge-on-read snapshot store —
-  * the other half of [[ThroughputBench]]'s write-side curve, so the
+  * the read side of the fold threshold's trade (perfbench's `pitr_drill`
+  * measures the write side), so the
   * [[graft.streaming.SnapshotStore.FoldThreshold]] default is data-backed
   * rather than asserted.
   *

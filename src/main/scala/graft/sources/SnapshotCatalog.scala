@@ -249,8 +249,8 @@ class SnapshotCatalog extends TableCatalog
     if (!tableExists(ident))
       throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(ident)
     val dir = dirOf(ident).toString
-    val conf = SparkSession.active.sessionState.newHadoopConf()
-    val current = SnapshotProjectedColumns.read(conf, dir)
+    val spark = SparkSession.active
+    val current = SnapshotProjectedColumns.read(spark.sessionState.newHadoopConf(), dir)
     val updated = changes.foldLeft(current) {
       case (cols, add: TableChange.AddColumn) =>
         require(add.fieldNames.length == 1,
@@ -280,7 +280,7 @@ class SnapshotCatalog extends TableCatalog
           s"graft-snapshot ALTER supports ADD/DROP of projected columns only; " +
             s"got ${other.getClass.getSimpleName}")
     }
-    SnapshotProjectedColumns.write(conf, dir, updated)
+    SnapshotProjectedColumns.write(spark, dir, updated)
     new SnapshotTable(dir)
   }
 
@@ -314,51 +314,19 @@ private[graft] object SnapshotProjectedColumns {
 
   def read(conf: org.apache.hadoop.conf.Configuration,
            dir: String): Seq[StructField] = {
-    val p = new Path(dir, FileName)
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) Nil
-    else {
-      val in = fs.open(p)
-      val txt =
-        try {
-          val len = fs.getFileStatus(p).getLen.toInt
-          val buf = new Array[Byte](len)
-          in.readFully(buf)
-          new String(buf, java.nio.charset.StandardCharsets.UTF_8)
-        } finally in.close()
-      txt.linesIterator.filter(_.nonEmpty).map { line =>
+    val root = new Path(dir)
+    graft.streaming.CommitProtocol.read(root.getFileSystem(conf), root, FileName).toSeq
+      .flatMap(_.linesIterator).filter(_.nonEmpty).map { line =>
         val Array(n, t) = line.split("\t", 2)
         StructField(n, DataType.fromDDL(t), nullable = true)
-      }.toSeq
-    }
+      }
   }
 
-  /** Tmp-write + OVERWRITE-rename (r13, was delete-then-rename): the
-    * swap is a single FileContext rename with Options.Rename.OVERWRITE,
-    * so there is no window in which dst is absent — a crash at any
-    * point leaves either the complete old file or the complete new one,
-    * never a silent revert to the base 4-column schema (the r12 form
-    * could lose ALL projected-column metadata to a crash between
-    * delete(dst) and rename(tmp, dst)). Stale `.tmp-*` files from prior
-    * crashed publishes are GC'd on the next write.
+  /** Replaced through the target's commit protocol: a crash at any point
+    * leaves either the complete old file or the complete new one, never
+    * a silent revert to the base 4-column schema.
     */
-  def write(conf: org.apache.hadoop.conf.Configuration, dir: String,
-            cols: Seq[StructField]): Unit = {
-    val dst = new Path(dir, FileName)
-    val fs = dst.getFileSystem(conf)
-    fs.listStatus(new Path(dir)).foreach { st =>
-      if (st.isFile && st.getPath.getName.startsWith(s"$FileName.tmp-"))
-        fs.delete(st.getPath, false)
-    }
-    val tmp = new Path(dir,
-      s"$FileName.tmp-${java.util.UUID.randomUUID().toString.take(8)}")
-    val out = fs.create(tmp, true)
-    try out.write(cols.map(f => s"${f.name}\t${f.dataType.catalogString}")
-      .mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      fs.makeQualified(dst).toUri, conf)
-    fc.rename(fs.makeQualified(tmp), fs.makeQualified(dst),
-      org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-  }
+  def write(spark: SparkSession, dir: String, cols: Seq[StructField]): Unit =
+    graft.streaming.SnapshotStore.replaceMeta(spark, dir, FileName,
+      cols.map(f => s"${f.name}\t${f.dataType.catalogString}").mkString("\n"))
 }

@@ -5,7 +5,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.streaming.SnapshotStore
+import graft.streaming.{CommitProtocol, SnapshotStore}
 
 /** ANALYZE-style table statistics for graft-snapshot tables (r13,
   * VERDICT r12 #4): the engine computes column profiles and histograms
@@ -168,7 +168,7 @@ object SnapshotTableStats {
     * wrong in the unsafe direction); untouched columns (`op`,
     * ANALYZE-time extras) carry forward.
     */
-  def fold(conf: Configuration, dir: String, st: TableStats,
+  def fold(spark: SparkSession, dir: String, st: TableStats,
            pre: Contribution, post: Contribution,
            newVersion: String): TableStats = {
     val cols = st.cols.map { c =>
@@ -187,7 +187,7 @@ object SnapshotTableStats {
       rows = math.max(0L, st.rows - pre.n + post.n),
       bytes = math.max(0L, st.bytes - pre.bytes + post.bytes),
       cols = cols, exact = false)
-    write(conf, dir, folded)
+    writeLocked(spark, dir, folded)
     folded
   }
 
@@ -195,12 +195,12 @@ object SnapshotTableStats {
     * the state-preserving maintenance case (full compaction rewrites
     * segments but resolves to the identical rows).
     */
-  def repin(conf: Configuration, dir: String, st: TableStats,
+  def repin(spark: SparkSession, dir: String, st: TableStats,
             newVersion: String): Unit =
-    write(conf, dir, st.copy(version = newVersion))
+    writeLocked(spark, dir, st.copy(version = newVersion))
 
-  /** Measure the resolved state and persist `_STATS` (atomic
-    * overwrite-rename, the `_COLUMNS` discipline). One aggregate pass;
+  /** Measure the resolved state and persist `_STATS` (replaced through
+    * the target's commit protocol). One aggregate pass;
     * NDV is EXACT (count_distinct) — ANALYZE is control-plane cadence
     * and an approximate NDV would make broadcast decisions depend on
     * sketch error.
@@ -251,48 +251,35 @@ object SnapshotTableStats {
         else None)
     }
     val stats = TableStats(version, rows, bytes, cols)
-    write(spark.sessionState.newHadoopConf(), dir, stats)
+    SnapshotStore.replaceMeta(spark, dir, FileName, render(stats))
     stats
   }
 
-  private def write(conf: Configuration, dir: String, st: TableStats): Unit = {
-    val dst = new Path(dir, FileName)
-    val fs = dst.getFileSystem(conf)
-    fs.listStatus(new Path(dir)).foreach { s =>
-      if (s.isFile && s.getPath.getName.startsWith(s"$FileName.tmp-"))
-        fs.delete(s.getPath, false)
-    }
-    val tmp = new Path(dir,
-      s"$FileName.tmp-${java.util.UUID.randomUUID().toString.take(8)}")
-    val lines = Seq(s"version\t${st.version}",
+  /** The `_STATS` line format: `version`, `mode` and `table` lines, then
+    * one `col` line per column (HLL registers base64-encoded).
+    */
+  private def render(st: TableStats): String =
+    (Seq(s"version\t${st.version}",
       s"mode\t${if (st.exact) "exact" else "incremental"}",
       s"table\t${st.rows}\t${st.bytes}") ++
       st.cols.map(c => s"col\t${c.name}\t${c.typ}\t${c.ndv}\t${c.nulls}" +
         s"\t${c.min.getOrElse("")}\t${c.max.getOrElse("")}" +
-        s"\t${c.regs.map(java.util.Base64.getEncoder.encodeToString).getOrElse("")}")
-    val out = fs.create(tmp, true)
-    try out.write(lines.mkString("\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      fs.makeQualified(dst).toUri, conf)
-    fc.rename(fs.makeQualified(tmp), fs.makeQualified(dst),
-      org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+        s"\t${c.regs.map(java.util.Base64.getEncoder.encodeToString).getOrElse("")}"))
+      .mkString("\n")
+
+  /** Replace `_STATS` from inside a publish (the caller holds the
+    * target's writer lock). */
+  private def writeLocked(spark: SparkSession, dir: String, st: TableStats): Unit = {
+    val root = new Path(dir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    CommitProtocol.forTarget(spark, fs, root).replace(fs, root, FileName, render(st))
   }
 
   def read(conf: Configuration, dir: String): Option[TableStats] = {
-    val p = new Path(dir, FileName)
     try {
-      val fs = p.getFileSystem(conf)
-      if (!fs.exists(p)) return None
-      val in = fs.open(p)
-      val txt =
-        try {
-          val len = fs.getFileStatus(p).getLen.toInt
-          val buf = new Array[Byte](len)
-          in.readFully(buf)
-          new String(buf, java.nio.charset.StandardCharsets.UTF_8)
-        } finally in.close()
+      val root = new Path(dir)
+      val txt = CommitProtocol.read(root.getFileSystem(conf), root, FileName)
+        .getOrElse(return None)
       val lines = txt.linesIterator.filter(_.nonEmpty).toSeq
       val version = lines.collectFirst {
         case l if l.startsWith("version\t") => l.split("\t", 2)(1)

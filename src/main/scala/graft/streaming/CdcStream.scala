@@ -253,7 +253,6 @@ object CdcStream {
                 retrySleep: Long => Unit = Thread.sleep,
                 compactEvery: Int = 0,
                 compactAtPpm: Long = 0,
-                amplifyCheckEvery: Int = 1,
                 quarantineDir: String = null): DataStreamWriter[org.apache.spark.sql.Row] =
     cdc.writeStream
       .option("checkpointLocation", checkpointDir)
@@ -324,10 +323,8 @@ object CdcStream {
             // the measured signal decides, not a blind cadence — chains
             // fold only when the footer-counted raw/resolved ratio says
             // readers are actually paying for them. Same sink-thread /
-            // best-effort contract as compactEvery; `amplifyCheckEvery`
-            // bounds the check's own cost (footer pass + one resolved
-            // count) on fast triggers.
-            if (compactAtPpm > 0 && (batchId + 1) % math.max(1, amplifyCheckEvery) == 0) {
+            // best-effort contract as compactEvery; checked every batch.
+            if (compactAtPpm > 0) {
               try SnapshotStore.compactIfAmplified(spark, targetDir, compactAtPpm)
                 .foreach(rep => System.err.println(
                   s"[applySink] amplification ${rep.amplificationPpm} ppm > " +
@@ -393,20 +390,6 @@ object CdcStream {
           .write.mode("append").parquet(auditDir)
         ()
       }
-
-  /** [[applySink]] over the transport seam: `source.stream(spark)` feeds
-    * the same sink, so a prod deployment swaps [[FileCdcSource]] for its
-    * Kinesis/Kafka [[CdcSource]] as a parameter — no call-site edits.
-    */
-  def applyPipeline(spark: SparkSession, source: CdcSource, targetDir: String,
-                    checkpointDir: String, deadletterDir: String,
-                    trigger: Trigger = Trigger.ProcessingTime("5 seconds"),
-                    retryAttempts: Int = 3,
-                    retrySleep: Long => Unit = Thread.sleep,
-                    compactEvery: Int = 0)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    applySink(source.stream(spark), targetDir, checkpointDir, deadletterDir,
-      trigger, retryAttempts, retrySleep, compactEvery)
 
   /** Pointer file naming the live snapshot manifest of a target. */
   val CurrentPointer: String = SnapshotStore.CurrentPointer

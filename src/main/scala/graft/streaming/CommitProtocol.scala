@@ -171,6 +171,14 @@ private[graft] sealed trait CommitProtocol {
     * `retainManifests` are live (called under the writer lock after GC).
     */
   def gcMeta(fs: FileSystem, targetDir: Path, retainManifests: Set[String]): Unit
+
+  /** Replace the target's named metadata file `name` (`_CURRENT`,
+    * `_VERSIONS`, `_STATS`, `_COLUMNS`, `_CONSTRAINTS`) with `content`,
+    * all-or-nothing for readers: a reader sees the complete old file or
+    * the complete new one, never a missing or partial file. Callers own
+    * only their line format; read back with [[CommitProtocol.read]].
+    */
+  def replace(fs: FileSystem, targetDir: Path, name: String, content: String): Unit
 }
 
 private[graft] object CommitProtocol {
@@ -196,10 +204,18 @@ private[graft] object CommitProtocol {
     try out.write(content.getBytes(StandardCharsets.UTF_8)) finally out.close()
   }
 
-  private def pointerFileValue(fs: FileSystem, targetDir: Path): Option[String] = {
-    val ptr = new Path(targetDir, SnapshotStore.CurrentPointer)
-    if (fs.exists(ptr)) Some(readFully(fs, ptr).trim) else None
-  }
+  /** A target's named metadata file read to EOF; None when absent. */
+  def read(fs: FileSystem, targetDir: Path, name: String): Option[String] =
+    try Some(readFully(fs, new Path(targetDir, name)))
+    catch { case _: java.io.FileNotFoundException => None }
+
+  /** Prefix of [[RenamePointer.replace]]'s tmp files; the store's GC
+    * sweep removes crash-orphaned ones.
+    */
+  val ReplaceTmpPrefix = ".pointer-tmp-"
+
+  private def pointerFileValue(fs: FileSystem, targetDir: Path): Option[String] =
+    read(fs, targetDir, SnapshotStore.CurrentPointer).map(_.trim)
 
   /** Highest (seq, manifestName) in the commit log, if any. A commit file
     * GC'd between list and read (only ever a non-max one, and only under
@@ -240,12 +256,19 @@ private[graft] object CommitProtocol {
         throw new java.util.ConcurrentModificationException(
           s"target pointer moved ${basis.getOrElse("<none>")} -> ${now.getOrElse("<none>")} " +
             "during this write; aborting publish (retry from the new basis)")
-      val tmp = new Path(targetDir, s".pointer-tmp-${System.nanoTime().toHexString}")
-      writeFile(fs, tmp, newManifest)
-      val fc = FileContext.getFileContext(fs.makeQualified(targetDir).toUri, hconf)
-      fc.rename(fs.makeQualified(tmp),
-        fs.makeQualified(new Path(targetDir, SnapshotStore.CurrentPointer)),
-        Options.Rename.OVERWRITE)
+      replace(fs, targetDir, SnapshotStore.CurrentPointer, newManifest)
+    }
+
+    /** Hidden tmp file, then one OVERWRITE rename: there is no window in
+      * which the file is absent, so a crash leaves the complete old file
+      * or the complete new one (plus an orphaned tmp for GC).
+      */
+    def replace(fs: FileSystem, targetDir: Path, name: String, content: String): Unit = {
+      val tmp = new Path(targetDir, s"$ReplaceTmpPrefix$name-${System.nanoTime().toHexString}")
+      writeFile(fs, tmp, content)
+      FileContext.getFileContext(fs.makeQualified(targetDir).toUri, hconf)
+        .rename(fs.makeQualified(tmp), fs.makeQualified(new Path(targetDir, name)),
+          Options.Rename.OVERWRITE)
     }
 
     /** Create-if-absent that is atomic on the local filesystem too:
@@ -366,6 +389,12 @@ private[graft] object CommitProtocol {
       entries.sortBy(_.getPath.getName).dropRight(2)
         .foreach(s => fs.delete(s.getPath, false))
     }
+
+    /** One whole-file create: a single PUT on an object store, visible
+      * all-or-nothing. There is no rename to use here.
+      */
+    def replace(fs: FileSystem, targetDir: Path, name: String, content: String): Unit =
+      writeFile(fs, new Path(targetDir, name), content)
   }
 
   /** Schemes whose rename is copy-object (or absent) rather than an

@@ -557,8 +557,9 @@ object SnapshotStore {
         }
 
   /** Committed-version journal file: one manifest name per line,
-    * appended (whole-file rewrite — it is retention-window sized) right
-    * after each successful commit, under the writer lock. Exists
+    * rewritten whole (it is retention-window sized) by
+    * [[CommitProtocol.replace]] right after each successful commit,
+    * under the writer lock. Exists
     * because a LISTING of manifest files cannot distinguish a retained
     * old version from a crashed publish's ORPHAN (data + manifest
     * written, pointer never advanced — the r8 PITR drill's exact crash
@@ -580,8 +581,8 @@ object SnapshotStore {
     */
   private def readJournalEntries(fs: FileSystem, targetDir: String)
       : Seq[(String, Option[Long])] =
-    try readFully(fs, new Path(targetDir, VersionsJournal))
-      .linesIterator.map(_.trim).filter(_.startsWith("manifest-"))
+    try CommitProtocol.read(fs, new Path(targetDir), VersionsJournal).iterator
+      .flatMap(_.linesIterator).map(_.trim).filter(_.startsWith("manifest-"))
       .map { line =>
         line.split("\t", 2) match {
           case Array(n, t) => n -> scala.util.Try(t.toLong).toOption
@@ -609,7 +610,7 @@ object SnapshotStore {
     * the first time (the new commit, or a self-healed basis) are
     * stamped with the current wall clock.
     */
-  private def journalCommit(fs: FileSystem, targetDir: String,
+  private def journalCommit(fs: FileSystem, protocol: CommitProtocol, targetDir: String,
                             committed: Seq[String]): Unit = {
     val prior = readJournalEntries(fs, targetDir)
       .filter { case (n, _) => fs.exists(new Path(targetDir, n)) }
@@ -618,7 +619,7 @@ object SnapshotStore {
     val next = prior ++ committed
       .filter(n => !priorNames.contains(n) && fs.exists(new Path(targetDir, n)))
       .distinct.map(n => n -> Some(now))
-    writeFile(fs, new Path(targetDir, VersionsJournal),
+    protocol.replace(fs, new Path(targetDir), VersionsJournal,
       next.map { case (n, t) => t.fold(n)(ms => s"$n\t$ms") }.mkString("\n"))
   }
 
@@ -820,6 +821,34 @@ object SnapshotStore {
       .commit(fsOf(spark, targetDir), new Path(targetDir), newManifest, basis)
   }
 
+  /** Crash-orphaned metadata tmps — [[CommitProtocol.replace]]'s, and
+    * the `<file>.tmp-*` ones metadata writers left before it (a live
+    * writer's tmp is renamed away before it returns, and every replace
+    * runs under the writer lock, as does this sweep) — and break tombs
+    * abandoned by a crashed breaker: a tomb in an ACTIVE break protocol
+    * lives milliseconds, so only old ones are collected.
+    */
+  private def orphanedTmp(st: org.apache.hadoop.fs.FileStatus): Boolean = {
+    val n = st.getPath.getName
+    st.isFile && (n.startsWith(CommitProtocol.ReplaceTmpPrefix) ||
+      (n.startsWith("_") && n.contains(".tmp-")) ||
+      (n.startsWith(".lock-broken-") &&
+        System.currentTimeMillis() - st.getModificationTime > StaleLockMs))
+  }
+
+  /** Replace a target's named metadata file from outside a publish
+    * (ALTER, constraint declaration, ANALYZE): under the writer lock,
+    * like every other replace, then sweep orphaned tmps as GC would —
+    * the lock is what makes the sweep safe against a live writer's tmp.
+    */
+  private[graft] def replaceMeta(spark: SparkSession, targetDir: String,
+                                 name: String, content: String): Unit =
+    withTargetLock(spark, targetDir) {
+      val (fs, root) = (fsOf(spark, targetDir), new Path(targetDir))
+      protocolFor(spark, targetDir).replace(fs, root, name, content)
+      fs.listStatus(root).filter(orphanedTmp).foreach(st => fs.delete(st.getPath, false))
+    }
+
   /** Delete everything not referenced by the retained manifests, at
     * bucket-subdir granularity (an old `data-*` dir stays alive as long as
     * ANY retained manifest still references one of its segments).
@@ -839,13 +868,7 @@ object SnapshotStore {
       val n = st.getPath.getName
       if (st.isFile && n.startsWith("manifest-") && !retainManifests.contains(n)) {
         fs.delete(st.getPath, false); ()
-      } else if (st.isFile && (n.startsWith(".pointer-tmp-") ||
-        (n.startsWith(".lock-broken-") &&
-          System.currentTimeMillis() - st.getModificationTime > StaleLockMs))) {
-        // crash-orphaned publish tmps (ours was already renamed away; GC
-        // runs under the writer lock) and break tombs abandoned by a
-        // crashed breaker — a tomb in an ACTIVE break protocol lives
-        // milliseconds, so only old ones are collected
+      } else if (orphanedTmp(st)) {
         fs.delete(st.getPath, false); ()
       } else if (st.isDirectory && n.startsWith("data-")) {
         liveByDir.get(n) match {
@@ -953,12 +976,12 @@ object SnapshotStore {
       }
     }.toSet
     gc(fs, targetDir, retainManifests = keepNames, retainData = keepData)
-    protocolFor(spark, targetDir)
-      .gcMeta(fs, new Path(targetDir), keepNames)
+    val proto = protocolFor(spark, targetDir)
+    proto.gcMeta(fs, new Path(targetDir), keepNames)
     // committed-version journal: record this commit (and self-heal the
     // basis / any journal entry GC just pruned) — after GC so the
     // on-disk filter reflects the retained set
-    journalCommit(fs, targetDir, basis.toSeq :+ manifestName)
+    journalCommit(fs, proto, targetDir, basis.toSeq :+ manifestName)
   }
 
   /** Per-written-segment projected-column stats for the zone maps
@@ -1132,7 +1155,7 @@ object SnapshotStore {
                     withSketch = true)
                   pointerValue(spark, targetDir).foreach { v =>
                     graft.sources.SnapshotTableStats.fold(
-                      hconf(spark), targetDir, st, preContrib.get, post, v)
+                      spark, targetDir, st, preContrib.get, post, v)
                   }
                 } catch {
                   case scala.util.control.NonFatal(e) => System.err.println(
@@ -1279,7 +1302,7 @@ object SnapshotStore {
             basis = Some(basisName), batchId = -1L, m.numBuckets, retainVersions)
           liveStats.foreach { st =>
             try pointerValue(spark, targetDir).foreach(v =>
-              graft.sources.SnapshotTableStats.repin(hconf(spark), targetDir, st, v))
+              graft.sources.SnapshotTableStats.repin(spark, targetDir, st, v))
             catch {
               case scala.util.control.NonFatal(e) => System.err.println(
                 s"[compactTarget] stats re-pin failed (stats degrade): ${e.getMessage}")
@@ -1395,7 +1418,7 @@ object SnapshotStore {
             retainVersions, sliceCol = Some("zs"))
           liveStats.foreach { st =>
             try pointerValue(spark, targetDir).foreach(v =>
-              graft.sources.SnapshotTableStats.repin(hconf(spark), targetDir, st, v))
+              graft.sources.SnapshotTableStats.repin(spark, targetDir, st, v))
             catch {
               case scala.util.control.NonFatal(e) => System.err.println(
                 s"[compactTargetClustered] stats re-pin failed (stats " +
@@ -1517,9 +1540,8 @@ object SnapshotStore {
     * table, or amplification within bounds).
     *
     * The check itself costs a parquet-footer metadata pass (no data
-    * read) plus ONE resolved count of the target — callers on a hot
-    * sink path should gate it with a cadence (see `applySink`'s
-    * `compactAtPpm`/`amplifyCheckEvery`), not call it per event.
+    * read) plus ONE resolved count of the target — a sink calls it once
+    * per micro-batch (see `applySink`'s `compactAtPpm`), not per event.
     * Post-compaction amplification is ~1e6 ppm by construction (one
     * applied-state row per live key), so a fired compaction resets the
     * signal and the policy cannot re-fire until chains regrow.
@@ -1607,7 +1629,7 @@ object SnapshotStore {
       val manifestName = srcName // same batch+nonce: provenance-preserving
       writeFile(fs, new Path(dstDir, manifestName), renderManifest(m))
       casSwapPointer(spark, dstDir, manifestName, basis = None)
-      journalCommit(fs, dstDir, Seq(manifestName))
+      journalCommit(fs, protocolFor(spark, dstDir), dstDir, Seq(manifestName))
     }
   }
 }

@@ -22,9 +22,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * hitter is ever evicted. This is the streaming face of
   * `agg_heavy_hitters` for corpora whose distinct-item cardinality
   * dwarfs memory: per-batch cost is O(|batch| + cap), state is cap
-  * rows at any corpus size. Versioning follows the StreamingMetrics
-  * discipline (v{batchId} derived from state < batchId + the batch —
-  * idempotent under crash-replay, committed by parquet's _SUCCESS).
+  * rows at any corpus size. Versioning is [[VersionedState]]'s
+  * (v{batchId} derived from state < batchId + the batch — idempotent
+  * under crash-replay, committed by parquet's _SUCCESS).
   */
 object StreamingHeavyHitters {
 
@@ -54,51 +54,24 @@ object StreamingHeavyHitters {
   def topK(state: DataFrame, k: Int): DataFrame =
     state.orderBy(col("cnt").desc, col("item")).limit(k)
 
-  private def versionsIn(spark: SparkSession, stateDir: String): Seq[Long] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(stateDir), spark.sessionState.newHadoopConf())
-    val p = new org.apache.hadoop.fs.Path(stateDir)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("v"))
-      .filter(s => fs.exists(new org.apache.hadoop.fs.Path(s.getPath, "_SUCCESS")))
-      .map(_.getPath.getName.drop(1).toLong)
-  }
+  /** The Misra–Gries state's versions ([[VersionedState]]). */
+  private[graft] def state(stateDir: String): VersionedState =
+    new VersionedState(stateDir, spark =>
+      spark.range(0).select(col("id").cast("string").as("item"),
+        col("id").as("cnt")))
 
-  private def emptyState(spark: SparkSession): DataFrame =
-    spark.range(0).select(col("id").cast("string").as("item"),
-      col("id").as("cnt"))
+  /** Fold one micro-batch of `item` rows into the state. */
+  private[graft] def foldBatch(cap: Int)(prev: DataFrame, batch: DataFrame): DataFrame =
+    fold(prev, countsOf(batch), cap)
 
   /** Latest committed state (empty-schema frame when none). */
-  def readState(spark: SparkSession, stateDir: String): DataFrame = {
-    val vs = versionsIn(spark, stateDir)
-    if (vs.isEmpty) emptyState(spark)
-    else spark.read.parquet(s"$stateDir/v${vs.max}")
-  }
-
-  /** Latest committed state STRICTLY BEFORE batch `b`. */
-  private[graft] def readStateBefore(spark: SparkSession, stateDir: String,
-                                     b: Long): DataFrame = {
-    val vs = versionsIn(spark, stateDir).filter(_ < b)
-    if (vs.isEmpty) emptyState(spark)
-    else spark.read.parquet(s"$stateDir/v${vs.max}")
-  }
+  def readState(spark: SparkSession, stateDir: String): DataFrame =
+    state(stateDir).latest(spark)
 
   /** Maintain the Misra–Gries state from a streaming frame with an
     * `item` column. */
   def maintain(items: DataFrame, cap: Int, stateDir: String,
                checkpoint: String,
                trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    items.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        val prev = readStateBefore(spark, stateDir, id)
-        fold(prev, countsOf(batch), cap)
-          .coalesce(1)
-          .write.mode("overwrite").parquet(s"$stateDir/v$id")
-        ()
-      }
-      .trigger(trigger)
-      .start()
+    state(stateDir).maintain(items, checkpoint, trigger)(foldBatch(cap))
 }

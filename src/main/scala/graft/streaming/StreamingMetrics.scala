@@ -16,13 +16,13 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * O(|batch| + |histogram|) per batch, independent of the corpus size the
   * histogram summarizes.
   *
-  * State versioning: version v{b} (b = the source-checkpointed batch id)
-  * is derived DETERMINISTICALLY from the latest version with id < b plus
-  * the batch slice, and committed by parquet's atomic-rename _SUCCESS.
-  * Crash-replay of an uncommitted batch rewrites the same version from
-  * the same inputs — exactly-once by idempotent re-derivation, the
-  * SnapshotStore discipline without needing its key-addressed merge
-  * (histogram merge is additive, not last-writer-wins).
+  * State versioning is [[VersionedState]]'s: version v{b} (b = the
+  * source-checkpointed batch id) is derived DETERMINISTICALLY from the
+  * latest version with id < b plus the batch slice, so crash-replay
+  * rewrites the same version from the same inputs — exactly-once by
+  * idempotent re-derivation, the SnapshotStore discipline without
+  * needing its key-addressed merge (histogram merge is additive, not
+  * last-writer-wins).
   */
 object StreamingMetrics {
 
@@ -57,51 +57,22 @@ object StreamingMetrics {
           (col("p") * col("nneg") * 2L).cast("double")).as("auc"))
   }
 
-  private def versionsIn(spark: SparkSession, stateDir: String): Seq[Long] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(stateDir), spark.sessionState.newHadoopConf())
-    val p = new org.apache.hadoop.fs.Path(stateDir)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("v"))
-      .filter(s => fs.exists(new org.apache.hadoop.fs.Path(s.getPath, "_SUCCESS")))
-      .map(_.getPath.getName.drop(1).toLong)
-  }
+  /** The histogram's versioned state ([[VersionedState]]). */
+  private[graft] def state(stateDir: String): VersionedState =
+    new VersionedState(stateDir, spark =>
+      spark.range(0).select(col("id").as("score"), col("id").as("n_i"),
+        col("id").as("p_i")))
+
+  /** Fold one micro-batch of (score, pos) rows into the histogram. */
+  private[graft] def foldBatch(prev: DataFrame, batch: DataFrame): DataFrame =
+    merge(prev, scoreHistogram(batch))
 
   /** Latest committed histogram (empty-schema frame when none). */
-  def readState(spark: SparkSession, stateDir: String): DataFrame = {
-    val vs = versionsIn(spark, stateDir)
-    if (vs.isEmpty)
-      spark.range(0).select(col("id").as("score"), col("id").as("n_i"),
-        col("id").as("p_i"))
-    else spark.read.parquet(s"$stateDir/v${vs.max}")
-  }
-
-  /** Latest committed histogram STRICTLY BEFORE batch `b` — what a
-    * replayed batch must fold onto, or redelivery would double-count.
-    */
-  private[graft] def readStateBefore(spark: SparkSession, stateDir: String,
-                                     b: Long): DataFrame = {
-    val vs = versionsIn(spark, stateDir).filter(_ < b)
-    if (vs.isEmpty)
-      spark.range(0).select(col("id").as("score"), col("id").as("n_i"),
-        col("id").as("p_i"))
-    else spark.read.parquet(s"$stateDir/v${vs.max}")
-  }
+  def readState(spark: SparkSession, stateDir: String): DataFrame =
+    state(stateDir).latest(spark)
 
   /** Maintain the histogram from a streaming (score, pos) frame. */
   def maintain(scored: DataFrame, stateDir: String, checkpoint: String,
                trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    scored.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        val prev = readStateBefore(spark, stateDir, id)
-        merge(prev, scoreHistogram(batch))
-          .coalesce(1)
-          .write.mode("overwrite").parquet(s"$stateDir/v$id")
-        ()
-      }
-      .trigger(trigger)
-      .start()
+    state(stateDir).maintain(scored, checkpoint, trigger)(foldBatch)
 }

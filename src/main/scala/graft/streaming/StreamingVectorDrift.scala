@@ -24,9 +24,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * (i, j, v) frame of d(d+1)/2 + d + 1 rows (j = −1 marks first
   * moments, i = j = −1 the count): merge = union + one hash-agg, so
   * per-batch cost is O(|batch|·d² map-side + |state|), independent of
-  * corpus size. Versioning follows the StreamingMetrics discipline
-  * (v{batchId} derived from state < batchId + the batch — idempotent
-  * under crash-replay, committed by parquet's atomic _SUCCESS).
+  * corpus size. Versioning is [[VersionedState]]'s (v{batchId} derived
+  * from state < batchId + the batch — idempotent under crash-replay,
+  * committed by parquet's atomic _SUCCESS).
   */
 object StreamingVectorDrift {
 
@@ -105,54 +105,26 @@ object StreamingVectorDrift {
     else (dot.sign * (dot * dot * 1000000 / (na * nb))).toLong
   }
 
-  private def versionsIn(spark: SparkSession, stateDir: String): Seq[Long] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(stateDir), spark.sessionState.newHadoopConf())
-    val p = new org.apache.hadoop.fs.Path(stateDir)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("v"))
-      .filter(s => fs.exists(new org.apache.hadoop.fs.Path(s.getPath, "_SUCCESS")))
-      .map(_.getPath.getName.drop(1).toLong)
-  }
+  /** The sums' versioned state ([[VersionedState]]). */
+  private[graft] def state(stateDir: String): VersionedState =
+    new VersionedState(stateDir, spark =>
+      spark.range(0).select(col("id").cast("int").as("i"),
+        col("id").cast("int").as("j"), col("id").as("v")))
 
-  private def emptyState(spark: SparkSession): DataFrame =
-    spark.range(0).select(col("id").cast("int").as("i"),
-      col("id").cast("int").as("j"), col("id").as("v"))
+  /** Fold one micro-batch of (vec_id, qs) rows into the sums. */
+  private[graft] def foldBatch(dim: Int)(prev: DataFrame, batch: DataFrame): DataFrame =
+    merge(prev, sumsOf(batch, dim))
 
   /** Latest committed sums (empty-schema frame when none). */
-  def readState(spark: SparkSession, stateDir: String): DataFrame = {
-    val vs = versionsIn(spark, stateDir)
-    if (vs.isEmpty) emptyState(spark)
-    else spark.read.parquet(s"$stateDir/v${vs.max}")
-  }
-
-  /** Latest committed sums STRICTLY BEFORE batch `b` (crash-replay
-    * must fold onto pre-batch state, never its own output). */
-  private[graft] def readStateBefore(spark: SparkSession, stateDir: String,
-                                     b: Long): DataFrame = {
-    val vs = versionsIn(spark, stateDir).filter(_ < b)
-    if (vs.isEmpty) emptyState(spark)
-    else spark.read.parquet(s"$stateDir/v${vs.max}")
-  }
+  def readState(spark: SparkSession, stateDir: String): DataFrame =
+    state(stateDir).latest(spark)
 
   /** Maintain the sums from a streaming frame of (vec_id, qs) shifted
     * component arrays. */
   def maintain(vectors: DataFrame, dim: Int, stateDir: String,
                checkpoint: String,
                trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    vectors.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        val prev = readStateBefore(spark, stateDir, id)
-        merge(prev, sumsOf(batch, dim))
-          .coalesce(1)
-          .write.mode("overwrite").parquet(s"$stateDir/v$id")
-        ()
-      }
-      .trigger(trigger)
-      .start()
+    state(stateDir).maintain(vectors, checkpoint, trigger)(foldBatch(dim))
 
   /** [[maintain]] with the alarm WIRED (r11, VERDICT r10 item 6): after
     * each micro-batch folds into the sums, the maintained axis is
@@ -170,15 +142,12 @@ object StreamingVectorDrift {
                         thresholdPpm: Long, onAlarm: Long => Unit,
                         trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val sums = state(stateDir)
     vectors.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        val prev = readStateBefore(spark, stateDir, id)
-        val state = merge(prev, sumsOf(batch, dim))
-        state.coalesce(1).write.mode("overwrite").parquet(s"$stateDir/v$id")
         val align = alignmentPpm(
-          axisFromState(readState(spark, stateDir), dim), baseline)
+          axisFromState(sums.step(batch, id)(foldBatch(dim)), dim), baseline)
         if (align < thresholdPpm && fired.compareAndSet(false, true))
           onAlarm(align)
         ()

@@ -24,8 +24,8 @@ import org.apache.spark.sql.functions._
   * projected-column idiom.
   *
   * Declarations persist as a `_CONSTRAINTS` metadata file next to the
-  * table (tab-separated name\texpr; tmp-write + OVERWRITE-rename — the
-  * SnapshotProjectedColumns crash-safety discipline), so every writer
+  * table (tab-separated name\texpr; replaced through the target's
+  * [[CommitProtocol]], like every metadata file), so every writer
   * of the target enforces the same contract. [[declare]] ANALYZES each
   * expression against the canonical schema first: a typo'd constraint
   * fails loudly at declaration, not silently at enforcement (the
@@ -43,23 +43,12 @@ object TableConstraints {
   private val FileName = "_CONSTRAINTS"
 
   def read(conf: Configuration, dir: String): Seq[Check] = {
-    val p = new Path(dir, FileName)
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) Nil
-    else {
-      val in = fs.open(p)
-      val txt =
-        try {
-          val len = fs.getFileStatus(p).getLen.toInt
-          val buf = new Array[Byte](len)
-          in.readFully(buf)
-          new String(buf, java.nio.charset.StandardCharsets.UTF_8)
-        } finally in.close()
-      txt.linesIterator.filter(_.nonEmpty).map { line =>
+    val root = new Path(dir)
+    CommitProtocol.read(root.getFileSystem(conf), root, FileName).toSeq
+      .flatMap(_.linesIterator).filter(_.nonEmpty).map { line =>
         val Array(n, e) = line.split("\t", 2)
         Check(n, e)
-      }.toSeq
-    }
+      }
   }
 
   /** Declare (replace) the target's constraint set. Validates loudly:
@@ -92,24 +81,8 @@ object TableConstraints {
       require(dt == org.apache.spark.sql.types.BooleanType,
         s"constraint '${c.name}' must be BOOLEAN, got ${dt.catalogString}")
     }
-    val conf = spark.sessionState.newHadoopConf()
-    val dst = new Path(dir, FileName)
-    val fs = dst.getFileSystem(conf)
-    fs.mkdirs(new Path(dir))
-    fs.listStatus(new Path(dir)).foreach { st =>
-      if (st.isFile && st.getPath.getName.startsWith(s"$FileName.tmp-"))
-        fs.delete(st.getPath, false)
-    }
-    val tmp = new Path(dir,
-      s"$FileName.tmp-${java.util.UUID.randomUUID().toString.take(8)}")
-    val out = fs.create(tmp, true)
-    try out.write(checks.map(c => s"${c.name}\t${c.expr}").mkString("\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      fs.makeQualified(dst).toUri, conf)
-    fc.rename(fs.makeQualified(tmp), fs.makeQualified(dst),
-      org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    SnapshotStore.replaceMeta(spark, dir, FileName,
+      checks.map(c => s"${c.name}\t${c.expr}").mkString("\n"))
   }
 
   // ── discovery → enforcement bridge (r16, VERDICT r15 #6) ──────────

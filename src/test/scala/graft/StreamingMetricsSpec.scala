@@ -64,12 +64,11 @@ class StreamingMetricsSpec extends SparkSpec {
     val stateDir = tmp("replay-state")
     val b0 = Seq((10L, 1L), (20L, 0L)).toDF("score", "pos")
     val b1 = Seq((10L, 0L), (30L, 1L)).toDF("score", "pos")
-    // simulate the foreachBatch bodies directly: commit batch 0, then
+    // run the sink's per-batch step directly: commit batch 0, then
     // "deliver" batch 1 twice (crash after commit, source replays)
     def applyBatch(batch: org.apache.spark.sql.DataFrame, id: Long): Unit = {
-      val prev = StreamingMetrics.readStateBefore(spark, stateDir, id)
-      StreamingMetrics.merge(prev, StreamingMetrics.scoreHistogram(batch))
-        .coalesce(1).write.mode("overwrite").parquet(s"$stateDir/v$id")
+      StreamingMetrics.state(stateDir).step(batch, id)(StreamingMetrics.foldBatch)
+      ()
     }
     applyBatch(b0, 0L)
     applyBatch(b1, 1L)
@@ -139,12 +138,10 @@ class StreamingMetricsSpec extends SparkSpec {
 
     val stateDir = tmp("drift2-state")
     def applyBatch(rows: Seq[(Long, Seq[Long])], id: Long): Unit = {
-      val batch = rows.toDF("vec_id", "qs")
-      val prev = graft.streaming.StreamingVectorDrift
-        .readStateBefore(spark, stateDir, id)
-      graft.streaming.StreamingVectorDrift.merge(prev,
-          graft.streaming.StreamingVectorDrift.sumsOf(batch, dim))
-        .coalesce(1).write.mode("overwrite").parquet(s"$stateDir/v$id")
+      graft.streaming.StreamingVectorDrift.state(stateDir)
+        .step(rows.toDF("vec_id", "qs"), id)(
+          graft.streaming.StreamingVectorDrift.foldBatch(dim))
+      ()
     }
     val phase1 = planted(u1, 300, 0)
     applyBatch(phase1, 0L)
@@ -186,10 +183,9 @@ class StreamingMetricsSpec extends SparkSpec {
     val stateDir = tmp("hh-state")
     import spark.implicits._
     def applyBatch(rows: Seq[String], id: Long): Unit = {
-      val prev = StreamingHeavyHitters.readStateBefore(spark, stateDir, id)
-      StreamingHeavyHitters.fold(prev,
-          StreamingHeavyHitters.countsOf(rows.toDF("item")), cap)
-        .coalesce(1).write.mode("overwrite").parquet(s"$stateDir/v$id")
+      StreamingHeavyHitters.state(stateDir)
+        .step(rows.toDF("item"), id)(StreamingHeavyHitters.foldBatch(cap))
+      ()
     }
     var delivered = Seq.empty[String]
     for ((slice, i) <- slices.zipWithIndex) {

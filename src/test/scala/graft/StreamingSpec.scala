@@ -433,7 +433,7 @@ class StreamingSpec extends SparkSpec {
       ("e1", "INSERT", ts("2024-01-01 00:00:01"), "001", "k1", Some("v1")),
       ("e2", "MODIFY", ts("2024-01-01 00:00:02"), "002", "k1", Some("v2")),
       ("e3", "INSERT", ts("2024-01-01 00:00:03"), "003", "k2", Some("w1")))
-    val q = CdcStream.applyPipeline(spark, memSource, target, ckpt, dlq,
+    val q = CdcStream.applySink(memSource.stream(spark), target, ckpt, dlq,
       trigger = Trigger.AvailableNow()).start()
     q.awaitTermination(60000)
     val state = CdcStream.readTarget(spark, target).select("keys", "newImage")
