@@ -220,8 +220,9 @@ object Corpus {
     * Bucketed-pair cost is Σ occ² ≈ n·occ, so holding occupancy constant
     * as n grows keeps the candidate stage LINEAR in corpus size — this is
     * the "more bits at scale" the sign-LSH scaladoc promises, now a
-    * function of n instead of prose. ScaleProbe charts the resulting
-    * occupancy curve; AnalyticsSpec pins the derivation.
+    * function of n instead of prose. BASELINE.md ("sign-LSH bucket
+    * occupancy") records the resulting occupancy curve; AnalyticsSpec
+    * pins the derivation.
     */
   def signBucketBits(corpusSize: Long, targetOccupancy: Long = 64): Int = {
     require(corpusSize >= 0 && targetOccupancy >= 1)

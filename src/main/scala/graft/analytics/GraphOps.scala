@@ -351,15 +351,13 @@ object GraphOps {
     * the per-round join then reuses the big side's partitioning and
     * only the label table (node-sized) shuffles each round.
     *
-    * `checkpointRounds` materializes each round's label table eagerly
-    * (localCheckpoint), truncating the lineage so the final action runs
-    * `rounds` shallow jobs instead of one job whose DAG holds every
-    * round's shuffle live at once — the knob the LPA memory-pressure
-    * ScaleProbe experiment races (values are identical either way; the
-    * probe asserts it).
+    * The lineage stays lazy: the final action runs one job whose DAG
+    * holds every round's shuffle. Checkpointing each round's label
+    * table instead measured value-identical and ~25% faster at x16
+    * (BASELINE.md, "LPA x16 memory-pressure adjudication"), but only
+    * adds fixed job overhead at the registry's scale factors.
     */
-  def labelPropagationBoth(both: DataFrame, rounds: Int,
-                           checkpointRounds: Boolean = false): DataFrame = {
+  def labelPropagationBoth(both: DataFrame, rounds: Int): DataFrame = {
     var labels = both.select(col("a").as("n")).distinct()
       .select(col("n"), col("n").as("label"))
     for (_ <- 1 to rounds) {
@@ -373,7 +371,6 @@ object GraphOps {
         .groupBy(col("a"))
         .agg(max(struct(col("cnt"), (-col("label")).as("nl"))).as("m"))
         .select(col("a").as("n"), (-col("m.nl")).as("label"))
-      if (checkpointRounds) labels = labels.localCheckpoint(true)
     }
     labels
   }
@@ -468,8 +465,8 @@ object GraphOps {
     * node keys over frames of size O(|V| + |E|); per-round frames are
     * localCheckpointed (the LSSS discipline) and the only driver-side
     * values are the convergence counts. Round counts are set by graph
-    * DIAMETER, not size — replication-invariant (the ScaleProbe scc
-    * slot gates this).
+    * DIAMETER, not size — replication-invariant (BASELINE.md, "r15
+    * close": x1→x16 flat, profile exactly k×-invariant).
     */
   /** localCheckpoint + STATS RESET for checkpoint-per-round loops.
     * `Dataset.localCheckpoint` preserves the source plan's ESTIMATED
@@ -529,10 +526,7 @@ object GraphOps {
       while (trimming && trimRounds < maxInner && activeCount > 0) {
         val (keep, kc) = ckptCounted(ea.select(col("u").as("n")).distinct()
           .join(ea.select(col("v").as("n")).distinct(), Seq("n")))
-        val nd = activeCount - kc
-        if (sys.env.contains("GRAFT_SCC_DEBUG"))
-          System.err.println(s"[scc] outer=$outer trim=$trimRounds dropped=$nd active=$activeCount")
-        if (nd == 0) trimming = false
+        if (kc == activeCount) trimming = false
         else {
           active = keep
           activeCount = kc
@@ -569,7 +563,6 @@ object GraphOps {
         // at any scale; probing still every second round.
         var prevSum: java.math.BigDecimal = null
         while (changed > 0 && inner < maxInner) {
-          val tR0 = System.nanoTime()
           // shortcut edges (lab(v) → v) are transitive-closure edges —
           // f(v)=m certifies m reaches v, b(v)=m that v reaches m — so
           // propagating across them is sound and gives pointer-doubling
@@ -603,8 +596,6 @@ object GraphOps {
             prevSum = sm
           }
           lab = nlab
-          if (sys.env.contains("GRAFT_SCC_DEBUG"))
-            System.err.println(s"[scc] outer=$outer inner=$inner changed=$changed active=$activeCount sec=${(System.nanoTime() - tR0) / 1e9}")
         }
         val (decided, ndec) = ckptCounted(lab.filter(col("dir") === 0)
           .select(col("n"), col("lab").as("fl"))

@@ -56,11 +56,11 @@ object Pca {
     // and the raw upper-triangle second moments into a single
     // per-partition buffer (the pair-EXPLODE formulation shipped
     // d(d+1)/2 struct rows per input row — measured 93 s vs ~3 s at
-    // the x64 pca ScaleProbe). Exact centering then applies the
-    // identity Σ(x−mu_i)(x−mu_j) = sxy − mu_i·sx_j − mu_j·sx_i +
-    // n·mu_i·mu_j on the driver — the same algebra StreamingVectorDrift
-    // maintains incrementally, so batch and streamed axes stay
-    // bit-equal.
+    // x64; BASELINE.md, "scale curve, exact-integer PCA"). Exact
+    // centering then applies the identity Σ(x−mu_i)(x−mu_j) =
+    // sxy − mu_i·sx_j − mu_j·sx_i + n·mu_i·mu_j on the driver — the
+    // same algebra StreamingVectorDrift maintains incrementally, so
+    // batch and streamed axes stay bit-equal.
     val cov = udaf(new graft.functions.CovSumsAgg(dim),
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Long]]())
     val s = sq.agg(cov(col("qs")).as("s")).collect()(0).getSeq[Long](0)

@@ -1321,9 +1321,10 @@ object SimilarityQueries {
     // strangers essentially never do — probes without matches REPORT
     // with n=0 (the left join), which is itself the operator's contract.
     // Scale shape: the same flat broadcast-probe scan as ann_brute
-    // (ScaleProbe-flat to 1.28M vecs) but with NO ordered stage at all —
-    // only per-probe count/sum/min/max partials cross the wire, so the
-    // reduce side is |probes| rows regardless of match volume.
+    // (flat to 1.28M vecs; BASELINE.md, "scale curve, ANN brute top-k")
+    // but with NO ordered stage at all — only per-probe count/sum/min/max
+    // partials cross the wire, so the reduce side is |probes| rows
+    // regardless of match volume.
 
     // ───── bounded-beam GRAPH search prototype (r13, VERDICT r12 #7 —
     // the HNSW/DiskANN adjudication made runnable): search walks a

@@ -13,12 +13,13 @@ import org.apache.spark.sql.expressions.Aggregator
   *
   * Why this exists next to the pair-explode formulation: the explode
   * ships d(d+1)/2 struct rows PER INPUT ROW into a hash-agg (266 M
-  * shuffled structs for 128 k×64-dim vectors — measured 93 s at x64 in
-  * the pca ScaleProbe), where this aggregate does the same 2 080
-  * multiply-adds per row into a single per-partition buffer and ships
-  * ONE 2 145-slot array per partition. Same exact integers, same
-  * result, map-side-combine-perfect — the custom-Aggregator-beats-
-  * generator-explode discipline of TopKScoredAgg/MinHash12.
+  * shuffled structs for 128 k×64-dim vectors — measured 93 s at x64;
+  * BASELINE.md, "scale curve, exact-integer PCA"), where this aggregate
+  * does the same 2 080 multiply-adds per row into a single per-partition
+  * buffer and ships ONE 2 145-slot array per partition. Same exact
+  * integers, same result, map-side-combine-perfect — the
+  * custom-Aggregator-beats-generator-explode discipline of
+  * TopKScoredAgg/MinHash12.
   */
 class CovSumsAgg(dim: Int)
     extends Aggregator[Seq[Long], Array[Long], Seq[Long]] {

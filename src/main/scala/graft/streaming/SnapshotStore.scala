@@ -266,17 +266,16 @@ object SnapshotStore {
     * commit point, and releases only a lock it still owns — including on
     * failed publishes.
     */
-  private[graft] def withTargetLock[A](spark: SparkSession, targetDir: String,
-                                       staleMs: Long = -1L,
-                                       waitMs: Long = -1L)(body: => A): A =
+  private[graft] def withTargetLock[A](spark: SparkSession, targetDir: String)
+                                      (body: => A): A =
     lockFor(spark, targetDir).synchronized {
-      // windows resolve caller arg > session conf > constant, so an
-      // operator can shorten the wait without threading parameters
-      // through every write entry point
+      // windows resolve session conf > constant, so an operator can
+      // shorten the wait without threading parameters through every
+      // write entry point
       def conf(key: String, dflt: Long) =
         spark.conf.getOption(key).map(_.toLong).getOrElse(dflt)
-      val effStale = if (staleMs > 0) staleMs else conf("spark.graft.lock.staleMs", StaleLockMs)
-      val effWait = if (waitMs > 0) waitMs else conf("spark.graft.lock.waitMs", LockWaitMs)
+      val effStale = conf("spark.graft.lock.staleMs", StaleLockMs)
+      val effWait = conf("spark.graft.lock.waitMs", LockWaitMs)
       val fs = fsOf(spark, targetDir)
       val proto = protocolFor(spark, targetDir)
       fs.mkdirs(new Path(targetDir))

@@ -821,11 +821,18 @@ class StreamingSpec extends SparkSpec {
     // stall on a loaded machine (a 100 ms-beat/400 ms-stale variant
     // flaked when one heartbeat tick was delayed 380 ms under ambient
     // load): heartbeat = stale/4 = 375 ms, hold 2x the stale window
-    SnapshotStore.withTargetLock(spark, target, staleMs = 1500L, waitMs = 4000L) {
-      Thread.sleep(3000) // 2x the stale window
-      val age = System.currentTimeMillis() - lockFile.lastModified()
-      assert(age < 1500L,
-        s"lock mtime is $age ms old — a waiter would wrongly break a LIVE writer's lock")
+    spark.conf.set("spark.graft.lock.staleMs", "1500")
+    spark.conf.set("spark.graft.lock.waitMs", "4000")
+    try {
+      SnapshotStore.withTargetLock(spark, target) {
+        Thread.sleep(3000) // 2x the stale window
+        val age = System.currentTimeMillis() - lockFile.lastModified()
+        assert(age < 1500L,
+          s"lock mtime is $age ms old — a waiter would wrongly break a LIVE writer's lock")
+      }
+    } finally {
+      spark.conf.unset("spark.graft.lock.staleMs")
+      spark.conf.unset("spark.graft.lock.waitMs")
     }
     assert(!lockFile.exists(), "owned lock not released")
   }
