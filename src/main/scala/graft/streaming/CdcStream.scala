@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 
@@ -54,9 +54,12 @@ final case class LateAlarm(keys: String, eventId: String, lateUs: Long)
   *  - DLQ after repeated failure (cdk-stack.ts:52-63) ⇒ per-batch retry
   *    with backoff, then a deadletter parquet path with the error (T5/T6).
   *
-  * Scale posture: each micro-batch does exactly one shuffle (the key
-  * hash for LWW + merge); state stores hold only watermark-bounded dedup
-  * keys; nothing collects to the driver.
+  * Scale posture: a micro-batch of [[applySink]] runs three shuffles —
+  * the eventID dedup, the per-key LWW window and the publish's bucket
+  * repartition (as wide as the session, so bucket segments are written
+  * in parallel). State stores hold only watermark-bounded dedup keys.
+  * What reaches the driver is two observed metrics: the batch's poison
+  * count and the delta's touched-bucket set (≤ the bucket count).
   */
 object CdcStream {
 
@@ -259,11 +262,15 @@ object CdcStream {
       .trigger(trigger)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         val spark = batch.sparkSession
-        val full = batch.toDF().localCheckpoint(true) // batch reused twice
+        // batch reused twice; the poison count rides on the checkpoint's
+        // own job instead of a separate emptiness probe
+        val poisonSeen = Observation()
+        val full = batch.toDF()
+          .observe(poisonSeen, count(when(isPoison, true)).as("poison"))
+          .localCheckpoint(true)
         try {
-          val poison = full.filter(isPoison)
-          if (!poison.isEmpty)
-            poison
+          if (poisonSeen.get("poison").asInstanceOf[Long] > 0)
+            full.filter(isPoison)
               .withColumn("error",
                 when(col("keys").isNull || col("eventName").isNull ||
                     col("sequenceNumber").isNull,
@@ -276,22 +283,24 @@ object CdcStream {
             spark.sessionState.newHadoopConf(), targetDir)
           val valid = if (checks.isEmpty) full.filter(!isPoison) else {
             // One constraint evaluation per batch: the flagged frame is
-            // consumed three times (empty probe, quarantine write, clean
-            // filter), so checkpoint it once instead of re-running every
-            // CHECK expression per consumer.
+            // consumed twice (quarantine write, clean filter), so
+            // checkpoint it once instead of re-running every CHECK
+            // expression per consumer; the violation count is observed
+            // on that checkpoint's job.
+            val violationSeen = Observation()
             val flagged = full.filter(!isPoison)
               .withColumn("_check_violation",
                 TableConstraints.violationCol(checks))
+              .observe(violationSeen, count(col("_check_violation")).as("bad"))
               .localCheckpoint(true)
-            val bad = flagged.filter(col("_check_violation").isNotNull)
             // Quarantine delivery contract (same as deadletter): AT LEAST
             // ONCE. The audit append lands before the merge, so a merge
             // failure + foreachBatch retry re-appends the same batch's
             // quarantine rows. Consumers must dedupe on
             // (keys, sequenceNumber, batchId) — unique per logical CDC
             // record and stable across retries.
-            if (!bad.isEmpty)
-              bad
+            if (violationSeen.get("bad").asInstanceOf[Long] > 0)
+              flagged.filter(col("_check_violation").isNotNull)
                 .withColumn("error",
                   concat(lit("check violation: "), col("_check_violation")))
                 .drop("_check_violation")
