@@ -14,7 +14,6 @@ import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
-import org.apache.spark.util.SerializableConfiguration
 
 import graft.streaming.SnapshotStore
 
@@ -124,14 +123,12 @@ private[sources] class SnapshotChangesStream(path: String) extends MicroBatchStr
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {
-    // driver-captured SESSION Hadoop conf (not a bare Configuration) so
-    // spark.hadoop.* object-store credentials reach executor-side I/O
-    val conf = new SerializableConfiguration(
-      spark.sessionState.newHadoopConf())
+    // the SESSION Hadoop conf, broadcast once per micro-batch scan
+    val conf = SnapshotSource.broadcastHadoopConf()
     new PartitionReaderFactory {
       override def createReader(p: InputPartition): PartitionReader[InternalRow] =
         new SnapshotChangesReader(p.asInstanceOf[SnapshotChangesPartition],
-          conf.value)
+          conf.value.value)
     }
   }
 }

@@ -98,8 +98,7 @@ private[sources] class SnapshotDeltaBatchWrite(path: String, rowCols: Seq[String
   override def createBatchWriterFactory(info: PhysicalWriteInfo)
       : DeltaWriterFactory =
     new SnapshotDeltaWriterFactory(staging, rowCols,
-      new org.apache.spark.util.SerializableConfiguration(
-        SparkSession.active.sessionState.newHadoopConf()))
+      SnapshotSource.broadcastHadoopConf())
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val spark = SparkSession.active
@@ -152,12 +151,13 @@ private[sources] class SnapshotDeltaBatchWrite(path: String, rowCols: Seq[String
 
 private[sources] class SnapshotDeltaWriterFactory(
     staging: String, rowCols: Seq[String],
-    conf: org.apache.spark.util.SerializableConfiguration)
+    conf: org.apache.spark.broadcast.Broadcast[
+      org.apache.spark.util.SerializableConfiguration])
     extends DeltaWriterFactory {
   override def createWriter(partitionId: Int,
                             taskId: Long): DeltaWriter[InternalRow] =
     new SnapshotDeltaRowWriter(
-      s"$staging/part-$partitionId-$taskId.parquet", rowCols, conf.value)
+      s"$staging/part-$partitionId-$taskId.parquet", rowCols, conf.value.value)
 }
 
 /** Translates delta callbacks to canonical 4-column delta rows staged

@@ -8,9 +8,11 @@ import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.schema.{MessageType, PrimitiveType, Types}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.parquet.schema.LogicalTypeAnnotation.stringType
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write._
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.streaming.SnapshotStore
 
@@ -115,8 +117,7 @@ private[sources] class SnapshotStreamingWrite(path: String, fieldIdx: Seq[Int])
   override def createStreamingWriterFactory(info: PhysicalWriteInfo)
       : org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory =
     new SnapshotStreamingWriterFactory(staging, fieldIdx,
-      new org.apache.spark.util.SerializableConfiguration(
-        SparkSession.active.sessionState.newHadoopConf()))
+      SnapshotSource.broadcastHadoopConf())
 
   override def commit(epochId: Long,
                       messages: Array[WriterCommitMessage]): Unit = {
@@ -144,13 +145,13 @@ private[sources] class SnapshotStreamingWrite(path: String, fieldIdx: Seq[Int])
 
 private[sources] class SnapshotStreamingWriterFactory(
     staging: String, fieldIdx: Seq[Int],
-    conf: org.apache.spark.util.SerializableConfiguration)
+    conf: Broadcast[SerializableConfiguration])
     extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long,
                             epochId: Long): DataWriter[InternalRow] =
     new SnapshotDataWriter(
       s"$staging/epoch-$epochId-part-$partitionId-$taskId.parquet",
-      fieldIdx, conf.value)
+      fieldIdx, conf.value.value)
 }
 
 private[sources] class SnapshotBatchWrite(path: String, batchId: Option[Long],
@@ -164,8 +165,7 @@ private[sources] class SnapshotBatchWrite(path: String, batchId: Option[Long],
     // a bare `new Configuration()` would drop spark.hadoop.* credentials
     // on any non-default filesystem
     new SnapshotDataWriterFactory(staging, fieldIdx,
-      new org.apache.spark.util.SerializableConfiguration(
-        SparkSession.active.sessionState.newHadoopConf()))
+      SnapshotSource.broadcastHadoopConf())
 
   /** Default batchId when no option is given: max batch id named by a
     * retained manifest, + 1 — deterministic and monotonic for the
@@ -213,11 +213,11 @@ private[sources] case class SnapshotWriteMessage(file: String, rows: Long)
 
 private[sources] class SnapshotDataWriterFactory(
     staging: String, fieldIdx: Seq[Int],
-    conf: org.apache.spark.util.SerializableConfiguration)
+    conf: Broadcast[SerializableConfiguration])
     extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     new SnapshotDataWriter(s"$staging/part-$partitionId-$taskId.parquet",
-      fieldIdx, conf.value)
+      fieldIdx, conf.value.value)
 }
 
 private[sources] class SnapshotDataWriter(file: String, fieldIdx: Seq[Int],

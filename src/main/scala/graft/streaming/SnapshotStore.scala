@@ -720,10 +720,11 @@ object SnapshotStore {
     * analog of the reference's `GetItem` (app/lambdas/check-ddb-status/
     * main.py point reads): I/O is O(|touched buckets|·chain), never
     * O(table), so a handful of keys against a 100 TB target reads a
-    * handful of bucket chains. The bucket set is computed by the same
-    * [[bucketExpr]] the writer used (one O(k)-row local job — control
-    * plane, like the k-means centroid pull); resolution semantics are
-    * identical to [[readTarget]] (per-key LWW, winning DELETE = absent).
+    * handful of bucket chains. The bucket set is computed on the driver
+    * by [[graft.sources.SnapshotSource.bucketOf]], the same
+    * pmod(xxhash64) as the writer's [[bucketExpr]], so it costs no job;
+    * resolution semantics are identical to [[readTarget]] (per-key LWW,
+    * winning DELETE = absent).
     * Single-column key targets only (the engine's `keys` shape).
     */
   def readKeys(spark: SparkSession, targetDir: String, lookups: Seq[String],
@@ -736,10 +737,8 @@ object SnapshotStore {
       case Some((name, m)) =>
         if (m.buckets.isEmpty || lookups.isEmpty) emptyCanonical(spark).filter(keyFilter)
         else {
-          import spark.implicits._
-          val touched = lookups.toDF(keyCol)
-            .select(bucketExpr(Seq(keyCol), m.numBuckets).as("b"))
-            .distinct().collect().map(_.getInt(0)).toSet
+          val touched = lookups.iterator
+            .map(graft.sources.SnapshotSource.bucketOf(_, m.numBuckets)).toSet
           val paths = m.buckets.view.filterKeys(touched)
             .values.flatten.map(rel => new Path(targetDir, rel).toString).toSeq
           if (paths.isEmpty) emptyCanonical(spark).filter(keyFilter)

@@ -57,24 +57,41 @@ class DataSourceV2Spec extends SparkSpec {
     assert(expect.find(_._1 == "k2").get._3 === """{"v":22}""") // stale lost
   }
 
+  /** Buckets the snapshot scan under `df` plans when `df` runs — read
+    * off the scan itself, because a driver-local lookup's RDD partition
+    * count is its row count's parallelism, not a bucket count.
+    */
+  private def plannedBuckets(df: org.apache.spark.sql.DataFrame): Int = {
+    df.collect()
+    df.queryExecution.optimizedPlan.collectFirst {
+      case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
+        r.scan match {
+          case l: graft.sources.SnapshotLocalScan => l.scan.lastPlannedBuckets
+          case s: graft.sources.SnapshotScan => s.lastPlannedBuckets
+        }
+    }.get
+  }
+
   test("pushed key filter prunes to the key's single bucket; result exact") {
     val dir = tmp("dsv2-point")
     buildTarget(dir)
     val v2 = spark.read.format("graft-snapshot").load(dir)
-    val full = v2.rdd.getNumPartitions
+    val full = plannedBuckets(v2)
     val point = v2.filter(col("keys") === "k2")
-    assert(point.rdd.getNumPartitions === 1,
-      s"point lookup must read one bucket (full scan reads $full)")
     assert(collectRows(point) ===
       collectRows(SnapshotStore.readTarget(spark, dir)
         .filter(col("keys") === "k2")))
+    assert(plannedBuckets(point) === 1,
+      s"point lookup must read one bucket (full scan reads $full)")
     // deleted key: pruned to its bucket AND correctly empty
-    assert(spark.read.format("graft-snapshot").load(dir)
-      .filter(col("keys") === "k3").count() === 0L)
+    val deleted = spark.read.format("graft-snapshot").load(dir)
+      .filter(col("keys") === "k3")
+    assert(deleted.collect().isEmpty)
+    assert(plannedBuckets(deleted) === 1)
     // IN list spans at most |keys| buckets
     val inq = v2.filter(col("keys").isin("k1", "k5"))
-    assert(inq.rdd.getNumPartitions <= 2)
     assert(collectRows(inq).map(_._1) === Set("k1", "k5"))
+    assert(plannedBuckets(inq) <= 2)
   }
 
   test("V2 write path: df.write appends a delta batch through the store's own commit") {
