@@ -455,21 +455,10 @@ private[sources] final class ManifestPin(path: String,
   lazy val value: Option[(String, SnapshotStore.Manifest)] = {
     val spark = SparkSession.active
     versionAsOf match {
-      // TIME TRAVEL: the committed-set check mirrors readTargetAsOf (a
-      // crashed publish's orphan manifest must not be readable as if it
-      // had committed)
-      case Some(v) =>
-        require(SnapshotStore.versions(spark, path).contains(v),
-          s"versionAsOf '$v' is not a committed retained version of '$path'")
-        // fail-loud like readTargetAsOf: if retention GC'd the manifest
-        // between the committed-set check and here, an empty scan would
-        // silently serve an EMPTY table for a version we just claimed
-        // committed
-        Some((v, SnapshotStore.manifestNamed(spark, path, v).getOrElse(
-          throw new IllegalStateException(
-            s"versionAsOf '$v' of '$path' was committed but its manifest " +
-              "is gone — retention pruned it during planning; raise " +
-              "retainVersions or pick a newer retained version"))))
+      // TIME TRAVEL: the same retained-and-committed check as
+      // readTargetAsOf (a crashed publish's orphan manifest must not be
+      // readable as if it had committed)
+      case Some(v) => Some((v, SnapshotStore.committedManifest(spark, path, v)))
       case None => SnapshotStore.currentManifest(spark, path)
     }
   }
@@ -516,12 +505,9 @@ private[graft] class SnapshotScan(path: String, required: StructType,
     * buckets — an upper bound on the resolved state (LWW supersession
     * and tombstones only shrink it), which is the safe direction for a
     * broadcast decision; row count is left unknown rather than guessed.
-    */
-  /** Listed-bytes sum, computed ONCE per Scan (Catalyst may request
-    * statistics several times while planning one query; each request
-    * used to re-run fs.listStatus over every pruned bucket). A Scan is
-    * per-query and the manifest it reads is pinned at plan time, so
-    * per-instance memoization is exactly per-(path, manifest).
+    * Computed ONCE per Scan: Catalyst may request statistics several
+    * times while planning one query, and the Scan's manifest is pinned,
+    * so per-instance memoization is exactly per-(path, manifest).
     */
   private lazy val listedBytes: Long = {
     val spark = SparkSession.active
@@ -762,11 +748,6 @@ private[graft] class SnapshotLocalScan(private[graft] val scan: SnapshotScan)
     }
 }
 
-/** Per-bucket merge-on-read resolve through parquet-mr (the executor has
-  * no SparkSession; parquet-hadoop ships with Spark). Chain order is
-  * irrelevant to the result — the LWW order is total over (sequence,
-  * raw) — so segments stream in manifest order purely for locality.
-  */
 /** Partial-aggregate scan (r11): one pre-aggregated row per bucket.
   * Each partition replays its chain exactly like the row scan (shared
   * [[SnapshotResolve]] — LWW + tombstones identical by construction)
@@ -844,8 +825,8 @@ private[sources] class SnapshotAggPartitionReader(
     val maxs = mutable.HashMap.empty[String, UTF8String]
     val needMin = cols.collect { case SnapshotAggScan.AggCol("min", Some(c)) => c }.toSet
     val needMax = cols.collect { case SnapshotAggScan.AggCol("max", Some(c)) => c }.toSet
-    SnapshotResolve.resolved(p.segmentDirs, conf).foreach {
-      case (k, op, seq, img) =>
+    SnapshotResolve.resolvedEx(p.segmentDirs, Nil, conf).foreach {
+      case (k, op, seq, img, _) =>
         n += 1
         val vals = Map("keys" -> k, "op" -> op, "sequenceNumber" -> seq,
           "newImage" -> img)
@@ -878,7 +859,11 @@ private[sources] class SnapshotAggPartitionReader(
 
 /** The shared bucket-chain LWW replay — one resolution implementation
   * for the row reader and the aggregate reader (r11), so the two paths
-  * cannot drift on sequence ordering or tombstone semantics.
+  * cannot drift on sequence ordering or tombstone semantics. It runs
+  * through parquet-mr (the executor has no SparkSession; parquet-hadoop
+  * ships with Spark). Chain order is irrelevant to the result — the LWW
+  * order is total over (sequence, raw) — so segments stream in manifest
+  * order purely for locality.
   */
 private[sources] object SnapshotResolve {
   // key -> (ordKey, op, seq, image)
@@ -890,14 +875,8 @@ private[sources] object SnapshotResolve {
   }
 
   /** Replay a bucket's segment chain; yields resolved LIVE rows
-    * (keys, sequenceNumber, newImage) — tombstones dropped.
-    */
-  def resolved(segmentDirs: Seq[String], conf: Configuration)
-      : Iterator[(String, String, String, String)] =
-    resolvedEx(segmentDirs, Nil, conf)
-      .map { case (k, op, seq, img, _) => (k, op, seq, img) }
-
-  /** [[resolved]] with per-segment image exclusion (r13 zone maps) and
+    * (keys, op, sequenceNumber, newImage, excluded) — tombstones
+    * dropped — with per-segment image exclusion (r13 zone maps) and
     * an optional exact key set: rows of other keys are dropped as they
     * are read, before any sequence comparison or image decode. LWW
     * stays exact because every row of a WANTED key is still compared.
@@ -1222,13 +1201,22 @@ private[graft] object JsonProjection {
   * metadata-less rows — the one definition both the resolving batch
   * reader and the raw change-feed reader consume.
   */
-private[sources] object ParquetSegments {
+private[graft] object ParquetSegments {
   def listParquet(conf: Configuration, dir: String): Seq[Path] = {
     val p = new Path(dir)
     p.getFileSystem(conf).listStatus(p).toSeq
       .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
       .map(_.getPath).sortBy(_.getName)
   }
+
+  /** Open a segment file (its footer is read here) with read options
+    * built from `conf`: `ParquetFileReader.open(InputFile)` builds them
+    * on a new default Hadoop configuration for every file, measured at
+    * ~12 ms an open against under 1 ms this way.
+    */
+  def open(conf: Configuration, file: Path): ParquetFileReader =
+    new ParquetFileReader(HadoopInputFile.fromPath(file, conf),
+      HadoopReadOptions.builder(conf, file).build())
 
   def foreachRow(conf: Configuration, file: Path,
                  skipImage: Boolean = false, keys: Option[Set[String]] = None)
@@ -1250,12 +1238,7 @@ private[sources] object ParquetSegments {
                                skipImage: Boolean = false,
                                keys: Option[Set[String]] = None)
       extends Iterator[Seq[(String, String, String, String)]] with AutoCloseable {
-    // read options from the given conf: `ParquetFileReader.open(InputFile)`
-    // builds them on a new default Hadoop configuration for every file,
-    // measured at ~12 ms an open against under 1 ms this way
-    private var reader: ParquetFileReader = new ParquetFileReader(
-      HadoopInputFile.fromPath(file, conf),
-      HadoopReadOptions.builder(conf, file).build())
+    private var reader: ParquetFileReader = open(conf, file)
     // zone-map image exclusion (r13): project the image column OUT of
     // the requested schema, so its pages are never read from storage —
     // resolution only needs (keys, op, sequenceNumber) from this file

@@ -119,9 +119,8 @@ object CdcStream {
     * stale short sequence beat a longer newer one.
     */
   def applyBatch(target: DataFrame, batch: DataFrame): DataFrame =
-    CdcOps.mergeLww(SnapshotStore.backfillSeq(target, "sequenceNumber"),
-      compactDelta(batch), keys = Seq("keys"),
-      opCol = "op", seqCol = "sequenceNumber", payload = Seq("newImage"))
+    CdcOps.mergeLww(SnapshotStore.backfillSeq(target), compactDelta(batch),
+      Seq("keys"), "op", "sequenceNumber", Seq("newImage"))
 
   /** Compacted per-key delta of one raw CDC micro-batch: dedup →
     * numeric-sequence LWW → PUT/DELETE plan. The ONE delta definition —
@@ -400,23 +399,6 @@ object CdcStream {
         ()
       }
 
-  /** Pointer file naming the live snapshot manifest of a target. */
-  val CurrentPointer: String = SnapshotStore.CurrentPointer
-
-  /** Full (non-pruned) publish — see [[SnapshotStore.writeTarget]]. */
-  def writeTarget(df: DataFrame, targetDir: String, batchId: Long): Unit =
-    SnapshotStore.writeTarget(df, targetDir, batchId)
-
-  /** Compaction through the same locked CAS publish —
-    * see [[SnapshotStore.compactTarget]].
-    */
-  def compactTarget(spark: SparkSession, targetDir: String): Unit =
-    SnapshotStore.compactTarget(spark, targetDir)
-
-  /** Current target snapshot — see [[SnapshotStore.readTarget]]. */
-  def readTarget(spark: SparkSession, targetDir: String): DataFrame =
-    SnapshotStore.readTarget(spark, targetDir)
-
   /** Per-key order: highest sequenceNumber wins. DynamoDB sequence
     * numbers are variable-length NUMERIC strings, so compare by
     * canonicalized (length, value) — numeric order without a 40-digit
@@ -497,7 +479,7 @@ object CdcStream {
     */
   /** `initial` bootstraps the state store from a pre-existing per-key
     * state — the restore integration: load the restored snapshot's LWW
-    * state (e.g. from [[readTarget]]) as `Dataset[KeyState]`, then
+    * state (e.g. from [[SnapshotStore.readTarget]]) as `Dataset[KeyState]`, then
     * stream the CDC buffer on top. A stale buffered delivery loses to
     * the seeded sequence number exactly as it would to a streamed one,
     * so "restore then drain" and "streamed all along" converge to the

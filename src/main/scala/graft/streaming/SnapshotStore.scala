@@ -5,6 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ops.CdcOps
+import graft.sources.ParquetSegments
 
 /** Bucket-manifest snapshot table — the streaming apply target, scaled.
   *
@@ -414,40 +415,35 @@ object SnapshotStore {
     * (gsi_key, ref_key)) must get ITS columns back from a fresh-table
     * read, or the first merge's seed select fails to resolve.
     */
-  private def emptyCanonical(spark: SparkSession,
-                             keyCols: Seq[String] = Seq("keys")): DataFrame =
+  private def emptyCanonical(spark: SparkSession, keys: Seq[String]): DataFrame =
     spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       org.apache.spark.sql.types.StructType(
-        (keyCols :+ "newImage").map(n =>
+        (keys :+ "newImage").map(n =>
           org.apache.spark.sql.types.StructField(n,
             org.apache.spark.sql.types.StringType))))
 
-  /** Missing merge metadata backfilled: a frame without the sequence or op
-    * column (a pre-seeded restore snapshot, or a `writeTarget` of applied
-    * state) is all-PUT with a null sequence, so every real delta outranks it.
+  /** Null-sequence backfill: a frame without the sequence column (a
+    * pre-seeded restore snapshot, or a `writeTarget` of applied state)
+    * gets a null sequence, so every real delta outranks it. Shared with
+    * [[CdcStream.applyBatch]] so the two apply paths keep ONE definition
+    * of "metadata-less rows lose".
     */
-  /** Null-sequence backfill (shared with [[CdcStream.applyBatch]] so the
-    * two apply paths keep ONE definition of "metadata-less rows lose").
-    */
-  private[graft] def backfillSeq(df: DataFrame, seqCol: String): DataFrame =
-    if (df.columns.contains(seqCol)) df
-    else df.withColumn(seqCol, lit(null).cast("string"))
+  private[graft] def backfillSeq(df: DataFrame): DataFrame =
+    if (df.columns.contains("sequenceNumber")) df
+    else df.withColumn("sequenceNumber", lit(null).cast("string"))
 
-  private def mergeReady(df: DataFrame, opCol: String, seqCol: String): DataFrame = {
-    val withSeq = backfillSeq(df, seqCol)
-    if (withSeq.columns.contains(opCol)) withSeq
-    else withSeq.withColumn(opCol, lit("PUT"))
-  }
+  /** An op column of "PUT" for a frame without one (metadata-less rows). */
+  private def withPutOp(df: DataFrame): DataFrame =
+    if (df.columns.contains("op")) df else df.withColumn("op", lit("PUT"))
 
   /** The engine's one LWW rule as a READ: per-key winner by numeric
     * sequence order (raw-rendering tiebreak makes it total), winning
     * DELETE = key absent. Null op (metadata-less seed rows) counts as PUT.
     */
-  private def compactState(df: DataFrame, keys: Seq[String],
-                           opCol: String, seqCol: String): DataFrame =
-    compactMarkers(df, keys, seqCol)
-      .filter(!coalesce(col(opCol) === "DELETE", lit(false)))
+  private def compactState(df: DataFrame, keys: Seq[String]): DataFrame =
+    compactMarkers(df, keys)
+      .filter(!coalesce(col("op") === "DELETE", lit(false)))
 
   /** LWW winners INCLUDING delete markers — the WRITE-side compaction.
     * Folding or bootstrapping a chain must KEEP each dead key's
@@ -460,12 +456,8 @@ object SnapshotStore {
     * the documented retention trade (a delivery staler than the last
     * compaction can win again — same contract as the stateful ops' TTL).
     */
-  private def compactMarkers(df: DataFrame, keys: Seq[String],
-                             seqCol: String): DataFrame =
-    CdcOps.lwwCompact(df, keys, CdcOps.numericStringOrder(col(seqCol)))
-
-  private def segmentPaths(targetDir: String, m: Manifest): Seq[Path] =
-    m.buckets.toSeq.sortBy(_._1).flatMap(_._2).map(rel => new Path(targetDir, rel))
+  private def compactMarkers(df: DataFrame, keys: Seq[String]): DataFrame =
+    CdcOps.lwwCompact(df, keys, CdcOps.numericStringOrder(col("sequenceNumber")))
 
   /** Current target snapshot (applied state — tombstones resolved).
     * Resolution order:
@@ -479,11 +471,9 @@ object SnapshotStore {
     *  3. Nothing → empty-but-schema'd frame (first batch of a fresh target).
     */
   def readTarget(spark: SparkSession, targetDir: String,
-                 keys: Seq[String] = Seq("keys"), opCol: String = "op",
-                 seqCol: String = "sequenceNumber"): DataFrame =
+                 keys: Seq[String] = Seq("keys")): DataFrame =
     currentManifest(spark, targetDir) match {
-      case Some((name, m)) =>
-        readManifestData(spark, targetDir, name, m, keys, opCol, seqCol)
+      case Some((name, m)) => readManifestData(spark, targetDir, name, m, keys)
       case None =>
         val fs = fsOf(spark, targetDir)
         val root = new Path(targetDir)
@@ -503,57 +493,59 @@ object SnapshotStore {
     * filter uniformly.
     */
   def readTargetMarkers(spark: SparkSession, targetDir: String,
-                        keys: Seq[String] = Seq("keys"), opCol: String = "op",
-                        seqCol: String = "sequenceNumber"): DataFrame =
+                        keys: Seq[String] = Seq("keys")): DataFrame =
     currentManifest(spark, targetDir) match {
       case Some((name, m)) =>
-        readManifestData(spark, targetDir, name, m, keys, opCol, seqCol,
-          keepMarkers = true)
-      case None =>
-        val base = readTarget(spark, targetDir, keys, opCol, seqCol)
-        if (base.columns.contains(opCol)) base
-        else base.withColumn(opCol, lit("PUT"))
+        readManifestData(spark, targetDir, name, m, keys, keepMarkers = true)
+      case None => withPutOp(readTarget(spark, targetDir, keys))
     }
 
-  /** Resolve one manifest's applied state (shared by the live read and
-    * the as-of read — identical semantics, different manifest).
-    * `keepMarkers` keeps each dead key's tombstone row and the op
-    * column (the [[readTargetMarkers]] face).
+  /** Resolve one manifest's applied state — the store's one parquet read
+    * over manifest segments, shared by the live read, the as-of read and
+    * both point reads (identical semantics, different manifest or bucket
+    * subset). `buckets` limits the read to those buckets' chains (None =
+    * every bucket), and only their segments must exist. `rowFilter` runs
+    * on the raw segment rows BEFORE the LWW window: a key filter commutes
+    * with per-key LWW, and applying it here keeps it under the window's
+    * shuffle instead of leaving that to the optimizer. `keepMarkers` keeps
+    * each dead key's tombstone row and the op column (the
+    * [[readTargetMarkers]] face).
     */
   private def readManifestData(spark: SparkSession, targetDir: String,
                                name: String, m: Manifest, keys: Seq[String],
-                               opCol: String, seqCol: String,
-                               keepMarkers: Boolean = false): DataFrame =
-    if (m.buckets.isEmpty) {
-      val e = emptyCanonical(spark, keys)
-      if (keepMarkers) e.withColumn(opCol, lit("PUT")) else e
-    }
-    else {
-          val fs = fsOf(spark, targetDir)
-          val paths = segmentPaths(targetDir, m)
-          // fail-loud existence check with ONE listStatus per data dir (a
-          // few dozen), not one exists() RPC per segment (up to
-          // buckets × FoldThreshold sequential namenode round trips)
-          paths.groupBy(_.getParent).foreach { case (dir, segs) =>
-            val present =
-              try fs.listStatus(dir).map(_.getPath.getName).toSet
-              catch { case _: java.io.FileNotFoundException => Set.empty[String] }
-            segs.find(p => !present.contains(p.getName)).foreach { p =>
-              throw new IllegalStateException(
-                s"manifest '$name' references missing snapshot data '$p' — refusing " +
-                  "to continue from a partial table")
-            }
-          }
-          // mergeSchema: segments can span schema vintages (e.g. a
-          // pre-seeded snapshot merged incrementally); footer-only cost
-          val df = spark.read.option("mergeSchema", "true")
-            .parquet(paths.map(_.toString): _*)
-          // metadata-less table (pure writeTarget publish): already state
-          if (!df.columns.contains(opCol)) {
-            if (keepMarkers) df.withColumn(opCol, lit("PUT")) else df
-          } else if (keepMarkers) compactMarkers(df, keys, seqCol)
-          else compactState(df, keys, opCol, seqCol).drop(opCol)
+                               keepMarkers: Boolean = false,
+                               buckets: Option[Set[Int]] = None,
+                               rowFilter: DataFrame => DataFrame = identity)
+      : DataFrame = {
+    val paths = m.buckets.toSeq.sortBy(_._1)
+      .filter { case (b, _) => buckets.forall(_.contains(b)) }
+      .flatMap(_._2).map(rel => new Path(targetDir, rel))
+    val state = if (paths.isEmpty) emptyCanonical(spark, keys) else {
+      val fs = fsOf(spark, targetDir)
+      // fail-loud existence check with ONE listStatus per data dir (a
+      // few dozen), not one exists() RPC per segment (up to
+      // buckets × FoldThreshold sequential namenode round trips)
+      paths.groupBy(_.getParent).foreach { case (dir, segs) =>
+        val present =
+          try fs.listStatus(dir).map(_.getPath.getName).toSet
+          catch { case _: java.io.FileNotFoundException => Set.empty[String] }
+        segs.find(p => !present.contains(p.getName)).foreach { p =>
+          throw new IllegalStateException(
+            s"manifest '$name' references missing snapshot data '$p' — refusing " +
+              "to continue from a partial table")
         }
+      }
+      // mergeSchema: segments can span schema vintages (e.g. a
+      // pre-seeded snapshot merged incrementally); footer-only cost
+      val df = rowFilter(spark.read.option("mergeSchema", "true")
+        .parquet(paths.map(_.toString): _*))
+      // metadata-less table (pure writeTarget publish): already state
+      if (!df.columns.contains("op")) df
+      else if (keepMarkers) compactMarkers(df, keys)
+      else compactState(df, keys).drop("op")
+    }
+    if (keepMarkers) withPutOp(state) else state
+  }
 
   /** Committed-version journal file: one manifest name per line,
     * rewritten whole (it is retention-window sized) by
@@ -648,32 +640,39 @@ object SnapshotStore {
     }
   }
 
-  /** Read the applied state AS OF a retained version — the store-level
-    * point-in-time read (the reference's PITR restore-to-timestamp,
-    * restore_handler's RestoreTableToPointInTime, served from the
-    * store's own retained manifests instead of a managed backup; pair
-    * with [[cloneTarget]] to materialize the old state as a new table).
-    * Fails loudly when the version is past the retention window (GC'd):
-    * a silently-empty result would look exactly like a valid old state.
+  /** A retained COMMITTED version's manifest — the one check behind
+    * every as-of read: [[readTargetAsOf]], [[cloneTarget]] and the V2
+    * scan's `versionAsOf`. Fails loudly when the version is past the
+    * retention window (GC'd, before or during the call) or is a crashed
+    * publish's orphan manifest: a silently-empty or never-live result
+    * would look exactly like a valid old state.
     */
-  def readTargetAsOf(spark: SparkSession, targetDir: String, version: String,
-                     keys: Seq[String] = Seq("keys"), opCol: String = "op",
-                     seqCol: String = "sequenceNumber"): DataFrame = {
-    val fs = fsOf(spark, targetDir)
-    val mf = new Path(targetDir, version)
-    if (!fs.exists(mf))
-      throw new IllegalStateException(
-        s"version '$version' is not retained at '$targetDir' — past the writer's " +
-          "retainVersions window (or never existed); raise retainVersions on the " +
-          "writer to widen the as-of window")
+  private[graft] def committedManifest(spark: SparkSession, targetDir: String,
+                                        version: String): Manifest = {
+    def notRetained = new IllegalStateException(
+      s"version '$version' is not retained at '$targetDir' — past the writer's " +
+        "retainVersions window (or never existed); raise retainVersions on the " +
+        "writer to widen the as-of window")
+    if (!fsOf(spark, targetDir).exists(new Path(targetDir, version))) throw notRetained
     if (!versions(spark, targetDir).contains(version))
       throw new IllegalStateException(
         s"version '$version' at '$targetDir' is not a COMMITTED version — a crashed " +
           "publish's orphan manifest (its pointer swap never happened); refusing to " +
           "serve a state that was never live")
-    readManifestData(spark, targetDir, version,
-      parseManifest(readFully(fs, mf), version), keys, opCol, seqCol)
+    manifestNamed(spark, targetDir, version).getOrElse(throw notRetained)
   }
+
+  /** Read the applied state AS OF a retained version — the store-level
+    * point-in-time read (the reference's PITR restore-to-timestamp,
+    * restore_handler's RestoreTableToPointInTime, served from the
+    * store's own retained manifests instead of a managed backup; pair
+    * with [[cloneTarget]] to materialize the old state as a new table).
+    * The version must pass [[committedManifest]].
+    */
+  def readTargetAsOf(spark: SparkSession, targetDir: String, version: String,
+                     keys: Seq[String] = Seq("keys")): DataFrame =
+    readManifestData(spark, targetDir, version,
+      committedManifest(spark, targetDir, version), keys)
 
   /** Store-level version diff: the per-key change set between two
     * COMMITTED retained versions — what the `cdc_snapshot_diff` query
@@ -684,19 +683,17 @@ object SnapshotStore {
     * versions fail loudly; the diff itself is one full-outer join on
     * the key with a null-safe payload compare — ADDED / REMOVED /
     * MODIFIED rows with `old_` / `new_` images, unchanged keys absent.
-    * Merge metadata (`op`, sequence) is excluded from the compare by
-    * default: a re-put of an identical image is not a change. Payload
-    * columns missing on one side (schema drift across versions) align
-    * as nulls.
+    * Merge metadata (`op`, sequence) is excluded from the compare: a
+    * re-put of an identical image is not a change. Payload columns
+    * missing on one side (schema drift across versions) align as nulls.
     */
   def diffVersions(spark: SparkSession, targetDir: String,
                    from: String, to: String,
-                   keys: Seq[String] = Seq("keys"), opCol: String = "op",
-                   seqCol: String = "sequenceNumber"): DataFrame = {
-    val a = readTargetAsOf(spark, targetDir, from, keys, opCol, seqCol)
-    val b = readTargetAsOf(spark, targetDir, to, keys, opCol, seqCol)
+                   keys: Seq[String] = Seq("keys")): DataFrame = {
+    val a = readTargetAsOf(spark, targetDir, from, keys)
+    val b = readTargetAsOf(spark, targetDir, to, keys)
     val payload = (a.columns ++ b.columns).distinct.toSeq
-      .filterNot(keys.contains).filterNot(Seq(opCol, seqCol).contains)
+      .filterNot(keys.contains).filterNot(Seq("op", "sequenceNumber").contains)
     def side(df: DataFrame, prefix: String, flag: String): DataFrame =
       df.select(keys.map(col) ++
         payload.map(c =>
@@ -724,33 +721,14 @@ object SnapshotStore {
     * by [[graft.sources.SnapshotSource.bucketOf]], the same
     * pmod(xxhash64) as the writer's [[bucketExpr]], so it costs no job;
     * resolution semantics are identical to [[readTarget]] (per-key LWW,
-    * winning DELETE = absent).
-    * Single-column key targets only (the engine's `keys` shape).
+    * winning DELETE = absent). Single-column key targets only (the
+    * engine's `keys` shape); columns as in [[pointRead]].
     */
-  def readKeys(spark: SparkSession, targetDir: String, lookups: Seq[String],
-               keyCol: String = "keys", opCol: String = "op",
-               seqCol: String = "sequenceNumber"): DataFrame = {
-    val keyFilter = col(keyCol).isin(lookups: _*)
-    currentManifest(spark, targetDir) match {
-      case None =>
-        readTarget(spark, targetDir, Seq(keyCol), opCol, seqCol).filter(keyFilter)
-      case Some((name, m)) =>
-        if (m.buckets.isEmpty || lookups.isEmpty) emptyCanonical(spark).filter(keyFilter)
-        else {
-          val touched = lookups.iterator
-            .map(graft.sources.SnapshotSource.bucketOf(_, m.numBuckets)).toSet
-          val paths = m.buckets.view.filterKeys(touched)
-            .values.flatten.map(rel => new Path(targetDir, rel).toString).toSeq
-          if (paths.isEmpty) emptyCanonical(spark).filter(keyFilter)
-          else {
-            val df = spark.read.option("mergeSchema", "true").parquet(paths: _*)
-              .filter(keyFilter) // pushed under the LWW window's shuffle
-            if (!df.columns.contains(opCol)) df
-            else compactState(df, Seq(keyCol), opCol, seqCol).drop(opCol)
-          }
-        }
+  def readKeys(spark: SparkSession, targetDir: String,
+               lookups: Seq[String]): DataFrame =
+    pointRead(spark, targetDir, _.filter(col("keys").isin(lookups: _*))) { m =>
+      lookups.iterator.map(graft.sources.SnapshotSource.bucketOf(_, m.numBuckets)).toSet
     }
-  }
 
   /** [[readKeys]] with the lookup set as a DATAFRAME — the delta-scale
     * point read. [[readKeys]]'s `Seq[String]` contract caps the lookup
@@ -766,37 +744,33 @@ object SnapshotStore {
     * from point read (few keys → few buckets) to full-chain semi-join
     * (uniform delta touching every bucket), never O(driver).
     */
-  def readKeysDf(spark: SparkSession, targetDir: String, lookups: DataFrame,
-                 keyCol: String = "keys", opCol: String = "op",
-                 seqCol: String = "sequenceNumber"): DataFrame = {
-    val lk = lookups.select(col(keyCol)).distinct()
-    // empty result in the RESOLVED shape (key, applied-watermark seq,
-    // image) so downstream selects analyze even when nothing matched
-    def emptyResolved: DataFrame =
-      emptyCanonical(spark).withColumnRenamed("keys", keyCol)
-        .withColumn(seqCol, lit(null).cast("string"))
-        .select(col(keyCol), col(seqCol), col("newImage"))
-    currentManifest(spark, targetDir) match {
-      case None =>
-        backfillSeq(readTarget(spark, targetDir, Seq(keyCol), opCol, seqCol), seqCol)
-          .join(lk, Seq(keyCol), "left_semi")
-      case Some((_, m)) =>
-        if (m.buckets.isEmpty) emptyResolved
-        else {
-          val touched = lk
-            .select(bucketExpr(Seq(keyCol), m.numBuckets).as("b"))
-            .distinct().collect().map(_.getInt(0)).toSet // ≤ numBuckets rows
-          val paths = m.buckets.view.filterKeys(touched)
-            .values.flatten.map(rel => new Path(targetDir, rel).toString).toSeq
-          if (paths.isEmpty) emptyResolved
-          else {
-            val df = spark.read.option("mergeSchema", "true").parquet(paths: _*)
-              .join(lk, Seq(keyCol), "left_semi") // commutes with per-key LWW
-            if (!df.columns.contains(opCol)) backfillSeq(df, seqCol)
-            else compactState(df, Seq(keyCol), opCol, seqCol).drop(opCol)
-          }
-        }
+  def readKeysDf(spark: SparkSession, targetDir: String,
+                 lookups: DataFrame): DataFrame = {
+    val lk = lookups.select(col("keys")).distinct()
+    pointRead(spark, targetDir, _.join(lk, Seq("keys"), "left_semi")) { m =>
+      lk.select(bucketExpr(Seq("keys"), m.numBuckets).as("b"))
+        .distinct().collect().map(_.getInt(0)).toSet // ≤ numBuckets rows
     }
+  }
+
+  /** The point reads' one body: [[readManifestData]] over the buckets
+    * `touched` names, with `keyFilter` on the raw segment rows; a table
+    * without a manifest (flat pre-seeded parquet, or none) goes through
+    * [[readTarget]]. Every branch, empty ones included, returns `keys`,
+    * `sequenceNumber` (null for metadata-less rows), then the payload.
+    */
+  private def pointRead(spark: SparkSession, targetDir: String,
+                        keyFilter: DataFrame => DataFrame)
+                       (touched: Manifest => Set[Int]): DataFrame = {
+    val state = backfillSeq(currentManifest(spark, targetDir) match {
+      case None => keyFilter(readTarget(spark, targetDir))
+      case Some((name, m)) =>
+        readManifestData(spark, targetDir, name, m, Seq("keys"),
+          buckets = Some(if (m.buckets.isEmpty) Set.empty[Int] else touched(m)),
+          rowFilter = keyFilter)
+    })
+    val lead = Seq("keys", "sequenceNumber")
+    state.select((lead ++ state.columns.filterNot(lead.contains)).map(col): _*)
   }
 
   // ---------------------------------------------------------------- writing
@@ -1070,7 +1044,7 @@ object SnapshotStore {
     * bounding read amplification; every publish commits through the
     * locked CAS swap.
     *
-    * `delta` must carry `keys ++ opCol ++ seqCol ++ payload`, already
+    * `delta` must carry `keys ++ op ++ sequenceNumber ++ payload`, already
     * deduped and LWW-compacted (one row per key).
     *
     * `foldThreshold` overrides [[FoldThreshold]] for this merge — the
@@ -1080,13 +1054,12 @@ object SnapshotStore {
     */
   def mergeIntoTarget(spark: SparkSession, targetDir: String, delta: DataFrame,
                       batchId: Long, keys: Seq[String] = Seq("keys"),
-                      opCol: String = "op", seqCol: String = "sequenceNumber",
                       payload: Seq[String] = Seq("newImage"),
                       numBuckets: Int = DefaultBuckets,
                       foldThreshold: Int = FoldThreshold,
                       retainVersions: Int = 2): Unit =
     withTargetLock(spark, targetDir) {
-      val outNames = keys ++ Seq(opCol, seqCol) ++ payload
+      val outNames = keys ++ Seq("op", "sequenceNumber") ++ payload
       val outCols = outNames.map(col)
       currentManifest(spark, targetDir) match {
         case Some((basisName, m)) =>
@@ -1113,8 +1086,7 @@ object SnapshotStore {
               // fail-safe-degrading on every write. Cost when live: two
               // delta-keyed point reads (the readKeysDf cost model) —
               // zero when no _STATS exists (one metadata read).
-              val canonicalShape = keys == Seq("keys") && opCol == "op" &&
-                seqCol == "sequenceNumber" && payload == Seq("newImage")
+              val canonicalShape = keys == Seq("keys") && payload == Seq("newImage")
               val maintSt =
                 if (!canonicalShape) None
                 else graft.sources.SnapshotTableStats.maintainable(
@@ -1154,7 +1126,7 @@ object SnapshotStore {
                   compactMarkers(
                     existing.unionByName(
                       d.filter(col(BucketCol).isin(foldSet.toSeq: _*)).select(outCols: _*)),
-                    keys, seqCol)
+                    keys)
                     .withColumn(BucketCol, bucketExpr(keys, n))
                     .select(outCols :+ col(BucketCol): _*)
                 }
@@ -1184,12 +1156,12 @@ object SnapshotStore {
         case None =>
           // fresh table, or a pre-seeded flat-parquet snapshot: one full
           // compacted write bucket-izes the seed; every later batch appends
-          val seed = mergeReady(readTarget(spark, targetDir, keys, opCol, seqCol),
-            opCol, seqCol).select(outCols: _*)
+          val seed = withPutOp(backfillSeq(readTarget(spark, targetDir, keys)))
+            .select(outCols: _*)
           // markers retained: a REMOVE in the very first batch must leave
           // its tombstone (sequence guard) in the basis segment
           val merged = compactMarkers(
-            seed.unionByName(delta.select(outCols: _*)), keys, seqCol)
+            seed.unionByName(delta.select(outCols: _*)), keys)
             .withColumn(BucketCol, bucketExpr(keys, numBuckets))
           publish(spark, targetDir, merged,
             keepChains = Map.empty, prefixChains = Map.empty,
@@ -1207,8 +1179,8 @@ object SnapshotStore {
     * restores to a FRESH table; conditional writes are what a restore
     * into a live table would need.
     *
-    * Delta rows carry `condCol` ∈ {'none' | NULL, 'not_exists',
-    * 'version'} and, for version guards, `expectCol` = the sequence the
+    * Delta rows carry `cond` ∈ {'none' | NULL, 'not_exists',
+    * 'version'} and, for version guards, `expectSeq` = the sequence the
     * writer read. Conditions evaluate against the PRE-BATCH resolved
     * state via the GetItem-batch semi-join ([[readKeysDf]] — point read
     * at delta scale, never a full-table scan): `not_exists` passes iff
@@ -1229,25 +1201,21 @@ object SnapshotStore {
     */
   def mergeConditional(spark: SparkSession, targetDir: String,
                        delta: DataFrame, batchId: Long,
-                       keyCol: String = "keys", opCol: String = "op",
-                       seqCol: String = "sequenceNumber",
                        payload: Seq[String] = Seq("newImage"),
-                       condCol: String = "cond",
-                       expectCol: String = "expectSeq",
                        numBuckets: Int = DefaultBuckets,
                        foldThreshold: Int = FoldThreshold,
                        retainVersions: Int = 2): DataFrame = {
-    val cur = readKeysDf(spark, targetDir, delta.select(col(keyCol)),
-        keyCol, opCol, seqCol)
-      .select(col(keyCol), col(seqCol).as("_cur_seq"),
+    val cur = readKeysDf(spark, targetDir, delta.select(col("keys")))
+      .select(col("keys"), col("sequenceNumber").as("_cur_seq"),
         lit(true).as("_cur_live"))
     // VALUE equality on numeric strings: the canonical (length, digits)
     // prefix of numericStringOrder — "005" and "5" are the same version
     // (the raw-rendering tiebreak only matters for row ordering)
     def ord(c: Column) =
       struct(graft.ops.CdcOps.numericStringOrder(c).take(2): _*)
+    val cond = col("cond")
     val judged = delta
-      .join(cur, Seq(keyCol), "left")
+      .join(cur, Seq("keys"), "left")
       .withColumn("_reject_reason",
         // A condition value outside the contract is REJECTED, never
         // silently applied: DynamoDB fails an invalid ConditionExpression
@@ -1256,20 +1224,20 @@ object SnapshotStore {
         // exact inversion the r14 advisor flagged. NULL and 'none' mean
         // unconditional by contract; everything else must be one of the
         // two guards or it lands in the audit stream as invalid_condition.
-        when(!(col(condCol).isNull || col(condCol).isin("none", "not_exists", "version")),
+        when(!(cond.isNull || cond.isin("none", "not_exists", "version")),
           lit("invalid_condition"))
-          .when(col(condCol) === "not_exists" && col("_cur_live").isNotNull,
+          .when(cond === "not_exists" && col("_cur_live").isNotNull,
             lit("exists"))
-          .when(col(condCol) === "version" && col("_cur_live").isNull,
+          .when(cond === "version" && col("_cur_live").isNull,
             lit("absent"))
-          .when(col(condCol) === "version" &&
-            !(ord(col("_cur_seq")) <=> ord(col(expectCol))),
+          .when(cond === "version" &&
+            !(ord(col("_cur_seq")) <=> ord(col("expectSeq"))),
             lit("version_mismatch")))
       .localCheckpoint(true)
     val accepted = judged.filter(col("_reject_reason").isNull)
-      .select((Seq(keyCol, opCol, seqCol) ++ payload).map(col): _*)
-    mergeIntoTarget(spark, targetDir, accepted, batchId, Seq(keyCol),
-      opCol, seqCol, payload, numBuckets, foldThreshold, retainVersions)
+      .select((Seq("keys", "op", "sequenceNumber") ++ payload).map(col): _*)
+    mergeIntoTarget(spark, targetDir, accepted, batchId, Seq("keys"),
+      payload, numBuckets, foldThreshold, retainVersions)
     // Audit rows carry the rejected write's OWN sequenceNumber: the
     // at-least-once contract in CdcStream.conditionalApplySink tells
     // consumers to dedupe on (keys, sequenceNumber) — a checkpoint replay
@@ -1278,9 +1246,8 @@ object SnapshotStore {
     // not correlate it (for not_exists, 'expected' is null, leaving only
     // the key). Flagged by the r14 advisor.
     judged.filter(col("_reject_reason").isNotNull)
-      .select(col(keyCol), col(seqCol).as("sequenceNumber"),
-        col(condCol).as("cond"),
-        col(expectCol).as("expected"), col("_cur_seq").as("found"),
+      .select(col("keys"), col("sequenceNumber"), cond,
+        col("expectSeq").as("expected"), col("_cur_seq").as("found"),
         col("_reject_reason").as("reason"))
   }
 
@@ -1293,8 +1260,7 @@ object SnapshotStore {
     * interleaving that loses a committed batch cannot happen.
     */
   def compactTarget(spark: SparkSession, targetDir: String,
-                    keys: Seq[String] = Seq("keys"), opCol: String = "op",
-                    seqCol: String = "sequenceNumber",
+                    keys: Seq[String] = Seq("keys"),
                     retainVersions: Int = 2): Unit =
     withTargetLock(spark, targetDir) {
       currentManifest(spark, targetDir) match {
@@ -1307,7 +1273,7 @@ object SnapshotStore {
           // Later appended deltas re-introduce op via mergeSchema; their
           // null-op compacted rows still read as PUT (compactState
           // coalesces null op).
-          val state = readTarget(spark, targetDir, keys, opCol, seqCol)
+          val state = readTarget(spark, targetDir, keys)
           // compaction resolves to IDENTICAL rows, so live stats stay
           // numerically true — re-pin them to the new version (r14)
           // instead of letting the version move orphan them
@@ -1359,8 +1325,6 @@ object SnapshotStore {
                              clusterCols: Seq[String],
                              slicesPerBucket: Int = 8,
                              keys: Seq[String] = Seq("keys"),
-                             opCol: String = "op",
-                             seqCol: String = "sequenceNumber",
                              retainVersions: Int = 2): Unit =
     withTargetLock(spark, targetDir) {
       currentManifest(spark, targetDir) match {
@@ -1382,7 +1346,7 @@ object SnapshotStore {
             Seq[DataType](LongType, IntegerType, DoubleType).contains(f.dataType),
             s"cluster column '${f.name}' must be numeric, " +
               s"got ${f.dataType.catalogString}"))
-          val state = readTarget(spark, targetDir, keys, opCol, seqCol)
+          val state = readTarget(spark, targetDir, keys)
           require(state.columns.contains("newImage"),
             "clustered compaction requires the canonical newImage layout")
           val stateCols = state.columns.toSeq
@@ -1464,14 +1428,13 @@ object SnapshotStore {
     * pressure or compact repeatedly when it must actually disappear).
     */
   def expireTarget(spark: SparkSession, targetDir: String, isExpired: Column,
-                   keys: Seq[String] = Seq("keys"), opCol: String = "op",
-                   seqCol: String = "sequenceNumber",
+                   keys: Seq[String] = Seq("keys"),
                    retainVersions: Int = 2): Long =
     withTargetLock(spark, targetDir) {
       currentManifest(spark, targetDir) match {
         case None => 0L
         case Some((basisName, m)) =>
-          val state = readTarget(spark, targetDir, keys, opCol, seqCol)
+          val state = readTarget(spark, targetDir, keys)
             .localCheckpoint(true)
           try {
             val keep = state.filter(!coalesce(isExpired, lit(false)))
@@ -1532,13 +1495,9 @@ object SnapshotStore {
       val conf = hconf(spark)
       val raw = m.buckets.values.flatten.toSet[String].toSeq.map { rel =>
         val dir = new Path(targetDir, rel)
-        val fs = dir.getFileSystem(conf)
-        if (!fs.exists(dir)) 0L
-        else fs.listStatus(dir).filter(s => s.isFile &&
-            s.getPath.getName.endsWith(".parquet")).map { st =>
-          val in = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-              st.getPath, conf))
+        if (!dir.getFileSystem(conf).exists(dir)) 0L
+        else ParquetSegments.listParquet(conf, dir.toString).map { f =>
+          val in = ParquetSegments.open(conf, f)
           try in.getRecordCount finally in.close()
         }.sum
       }.sum
@@ -1599,19 +1558,7 @@ object SnapshotStore {
       case None =>
         currentManifest(spark, srcDir).getOrElse(
           throw new IllegalStateException(s"no snapshot table at '$srcDir' to clone"))
-      case Some(version) =>
-        val srcFs0 = fsOf(spark, srcDir)
-        val mf = new Path(srcDir, version)
-        if (!srcFs0.exists(mf))
-          throw new IllegalStateException(
-            s"version '$version' is not retained at '$srcDir' — past the writer's " +
-              "retainVersions window (or never existed); raise retainVersions on the " +
-              "writer to widen the as-of window")
-        if (!versions(spark, srcDir).contains(version))
-          throw new IllegalStateException(
-            s"version '$version' at '$srcDir' is not a COMMITTED version — a crashed " +
-              "publish's orphan manifest; refusing to clone a state that was never live")
-        (version, parseManifest(readFully(srcFs0, mf), version))
+      case Some(version) => (version, committedManifest(spark, srcDir, version))
     }
     val fs = fsOf(spark, dstDir)
     require(currentManifest(spark, dstDir).isEmpty,

@@ -5,7 +5,7 @@ import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 
-import graft.streaming.{CdcStream, CommitProtocol, ConditionalPut, SnapshotStore}
+import graft.streaming.{CommitProtocol, ConditionalPut, SnapshotStore}
 
 /** The object-store commit protocol, proven against a filesystem whose
   * rename and exclusive-create are deliberately NON-atomic
@@ -48,7 +48,7 @@ class CommitProtocolSpec extends SparkSpec {
   }
 
   private def state(target: String): Map[String, String] =
-    CdcStream.readTarget(spark, target).select("keys", "newImage")
+    SnapshotStore.readTarget(spark, target).select("keys", "newImage")
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
 
   test("conditional put admits exactly one of many racing writers") {

@@ -22,7 +22,7 @@ class ConditionalWriteSpec extends SparkSpec {
     rows.toDF("keys", "op", "sequenceNumber", "newImage", "cond", "expectSeq")
 
   private def state(target: String): Map[String, String] =
-    CdcStream.readTarget(spark, target).select("keys", "newImage")
+    SnapshotStore.readTarget(spark, target).select("keys", "newImage")
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
 
   private def audit(df: org.apache.spark.sql.DataFrame)

@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.streaming.{CdcStream, TableConstraints}
+import graft.streaming.{CdcStream, SnapshotStore, TableConstraints}
 
 /** Profile→constraint loop (r16, VERDICT r15 #6): dependencies that
   * HOLD over a target's current state become candidate CHECK rows
@@ -86,7 +86,7 @@ class ConstraintProposalSpec extends SparkSpec {
     assert(audit === Set(
       ("k5", "check violation: q_in_range"),
       ("k6", "check violation: fd_cat_determines_region")))
-    val state = CdcStream.readTarget(spark, target).select("keys")
+    val state = SnapshotStore.readTarget(spark, target).select("keys")
       .collect().map(_.getString(0)).toSet
     assert(state === Set("k1", "k2", "k3", "k4", "k7", "k8"))
   }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.restore.{RestoreSession, RestoreStatus}
-import graft.streaming.CdcStream
+import graft.streaming.{CdcStream, SnapshotStore}
 
 /** The reference's whole point, end to end: live CDC buffers while a
   * restore runs; once the target is ACTIVE the gate opens and the drain
@@ -57,7 +57,7 @@ class RestoreFlowSpec extends SparkSpec {
     assert(drainStarted && query.isDefined)
     query.get.awaitTermination(60000)
 
-    val state = CdcStream.readTarget(spark, target).select("keys", "newImage")
+    val state = SnapshotStore.readTarget(spark, target).select("keys", "newImage")
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     // batch restoreReplay semantics on the same inputs:
     // k1 updated, k2 tombstoned, k3 inserted

@@ -46,7 +46,7 @@ class StreamingSpec extends SparkSpec {
       target, ckpt, dlq, trigger = Trigger.AvailableNow()).start()
     q.awaitTermination(60000)
 
-    val state = CdcStream.readTarget(spark, target).select("keys", "newImage")
+    val state = SnapshotStore.readTarget(spark, target).select("keys", "newImage")
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(state === Map("k1" -> "v2", "k3" -> "x1")) // k2 deleted
 
@@ -57,7 +57,7 @@ class StreamingSpec extends SparkSpec {
       CdcStream.cdcFileSource(spark, in, maxFilesPerTrigger = 1),
       target, ckpt, dlq, trigger = Trigger.AvailableNow()).start()
     q2.awaitTermination(60000)
-    val state2 = CdcStream.readTarget(spark, target).select("keys", "newImage")
+    val state2 = SnapshotStore.readTarget(spark, target).select("keys", "newImage")
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(state2 === state)
 
@@ -80,7 +80,7 @@ class StreamingSpec extends SparkSpec {
     // segment must keep k2's tombstone row, not just drop the key
     SnapshotStore.mergeIntoTarget(spark, target,
       delta(("k2", "DELETE", "004", None), ("k3", "PUT", "005", Some("x1"))), 0L)
-    def state() = CdcStream.readTarget(spark, target).select("keys", "newImage")
+    def state() = SnapshotStore.readTarget(spark, target).select("keys", "newImage")
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(state() === Map("k3" -> "x1"))
     // stale pre-delete PUTs, one batch each, enough to push k2's bucket
@@ -336,7 +336,7 @@ class StreamingSpec extends SparkSpec {
       target, ckpt, dlq, trigger = Trigger.AvailableNow(), compactEvery = 3).start()
     q.awaitTermination(60000)
     // converged LWW state survives the compaction that ran after batch 3
-    val state = CdcStream.readTarget(spark, target).select("keys", "newImage")
+    val state = SnapshotStore.readTarget(spark, target).select("keys", "newImage")
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(state === Map("k1" -> "v2", "k3" -> "x1"))
     // every bucket chain folded to ONE segment (compacted basis)
@@ -350,7 +350,7 @@ class StreamingSpec extends SparkSpec {
       CdcStream.cdcFileSource(spark, in, maxFilesPerTrigger = 1),
       target, ckpt, dlq, trigger = Trigger.AvailableNow(), compactEvery = 3).start()
     q2.awaitTermination(60000)
-    val state2 = CdcStream.readTarget(spark, target).select("keys", "newImage")
+    val state2 = SnapshotStore.readTarget(spark, target).select("keys", "newImage")
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(state2 === Map("k1" -> "v2", "k3" -> "x2"))
   }
@@ -372,7 +372,7 @@ class StreamingSpec extends SparkSpec {
     val before = SnapshotStore.amplificationReport(spark, target).get
     assert(before.amplificationPpm > 3000000L,
       s"waves must push amplification past the threshold: $before")
-    val state0 = CdcStream.readTarget(spark, target).select("keys", "newImage")
+    val state0 = SnapshotStore.readTarget(spark, target).select("keys", "newImage")
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
 
     // the policy fires exactly once: first call compacts (returns the
@@ -384,7 +384,7 @@ class StreamingSpec extends SparkSpec {
     assert(SnapshotStore.compactIfAmplified(spark, target, 3000000L).isEmpty,
       "policy must not re-fire below the threshold")
     // state is a plan-only property of the compaction: unchanged
-    val state1 = CdcStream.readTarget(spark, target).select("keys", "newImage")
+    val state1 = SnapshotStore.readTarget(spark, target).select("keys", "newImage")
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(state1 === state0)
 
@@ -401,7 +401,7 @@ class StreamingSpec extends SparkSpec {
       target, ckpt, dlq, trigger = Trigger.AvailableNow(),
       compactAtPpm = 3000000L).start()
     q.awaitTermination(60000)
-    val state2 = CdcStream.readTarget(spark, target).select("keys", "newImage")
+    val state2 = SnapshotStore.readTarget(spark, target).select("keys", "newImage")
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(state2 === (1 to 20).map(i => s"k$i" -> s"s9-$i").toMap)
     // the signal was acted on: amplification is bounded well below the
@@ -436,7 +436,7 @@ class StreamingSpec extends SparkSpec {
     val q = CdcStream.applySink(memSource.stream(spark), target, ckpt, dlq,
       trigger = Trigger.AvailableNow()).start()
     q.awaitTermination(60000)
-    val state = CdcStream.readTarget(spark, target).select("keys", "newImage")
+    val state = SnapshotStore.readTarget(spark, target).select("keys", "newImage")
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(state === Map("k1" -> "v2", "k2" -> "w1"))
   }
@@ -444,32 +444,32 @@ class StreamingSpec extends SparkSpec {
   test("writeTarget publishes atomically: a failed write leaves the previous snapshot live") {
     import spark.implicits._
     val target = tmp("atomic-target")
-    CdcStream.writeTarget(Seq(("k1", "v1")).toDF("keys", "newImage"), target, 0L)
+    SnapshotStore.writeTarget(Seq(("k1", "v1")).toDF("keys", "newImage"), target, 0L)
     val boom = udf((s: String) => {
       if (s != null) throw new RuntimeException("disk full"); s
     })
     assertThrows[Exception] {
-      CdcStream.writeTarget(
+      SnapshotStore.writeTarget(
         Seq(("k2", "v2")).toDF("keys", "newImage")
           .withColumn("newImage", boom(col("newImage"))),
         target, 1L)
     }
     // the pointer still names the batch-0 snapshot; nothing was lost
-    val state = CdcStream.readTarget(spark, target).select("keys", "newImage")
+    val state = SnapshotStore.readTarget(spark, target).select("keys", "newImage")
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(state === Map("k1" -> "v1"))
     // the next successful publish retains the batch-0 manifest+data (live
     // until the swap) as the grace window and GCs the failed attempt's
     // partial data dir; a further publish rotates the grace window
-    CdcStream.writeTarget(Seq(("k3", "v3")).toDF("keys", "newImage"), target, 2L)
+    SnapshotStore.writeTarget(Seq(("k3", "v3")).toDF("keys", "newImage"), target, 2L)
     def names = new java.io.File(target).listFiles().map(_.getName).toSet
     assert(names.exists(_.startsWith("manifest-000000000000-"))) // grace = previously live
     assert(names.exists(_.startsWith("data-000000000000-")))
     assert(!names.exists(_.startsWith("data-000000000001-"))) // partial junk GC'd
-    CdcStream.writeTarget(Seq(("k4", "v4")).toDF("keys", "newImage"), target, 3L)
+    SnapshotStore.writeTarget(Seq(("k4", "v4")).toDF("keys", "newImage"), target, 3L)
     assert(!names.exists(_.startsWith("manifest-000000000000-"))) // grace rotated out
     assert(!names.exists(_.startsWith("data-000000000000-")))
-    val state2 = CdcStream.readTarget(spark, target).select("keys", "newImage")
+    val state2 = SnapshotStore.readTarget(spark, target).select("keys", "newImage")
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(state2 === Map("k4" -> "v4"))
   }
@@ -477,7 +477,7 @@ class StreamingSpec extends SparkSpec {
   test("compactTarget consolidates accumulated data dirs via the same locked swap") {
     import spark.implicits._
     val target = tmp("compact-target")
-    CdcStream.writeTarget(
+    SnapshotStore.writeTarget(
       (1 to 50).map(i => (s"k$i", s"v$i")).toDF("keys", "newImage"), target, 0L)
     // three pruned merges, each adding a per-batch data dir to the manifest
     for (b <- 1 to 3)
@@ -487,9 +487,9 @@ class StreamingSpec extends SparkSpec {
     def dataDirs = SnapshotStore.currentManifest(spark, target).get
       ._2.buckets.values.flatten.map(_.split("/")(0)).toSet
     assert(dataDirs.size > 1) // the accumulation compaction exists for
-    CdcStream.compactTarget(spark, target)
+    SnapshotStore.compactTarget(spark, target)
     assert(dataDirs.size == 1)
-    val state = CdcStream.readTarget(spark, target).select("keys", "newImage")
+    val state = SnapshotStore.readTarget(spark, target).select("keys", "newImage")
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     val expect = (1 to 50).map(i => s"k$i" -> s"v$i").toMap ++
       (1 to 3).map(i => s"k$i" -> s"u$i")
@@ -499,17 +499,56 @@ class StreamingSpec extends SparkSpec {
   test("readKeys: bucket-pruned point read touches only the looked-up keys' chains") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.catalyst.expressions.{In, InSet}
+    import org.apache.spark.sql.catalyst.plans.LeftSemi
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, LogicalPlan, Window}
     val target = tmp("pointread-target")
-    CdcStream.writeTarget(
+    SnapshotStore.writeTarget(
       (1 to 200).map(i => (s"k$i", s"v$i")).toDF("keys", "newImage"), target, 0L)
     SnapshotStore.mergeIntoTarget(spark, target,
       Seq(("k7", "PUT", "001", Some("v7b")), ("k8", "DELETE", "002", None))
         .toDF("keys", "op", "sequenceNumber", "newImage"), 1L)
-    def pointRead() = SnapshotStore.readKeys(spark, target, Seq("k7", "k8", "k9", "nope"))
-      .select("keys", "newImage").collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    val lookups = Seq("k7", "k8", "k9", "nope")
+    def asMap(df: org.apache.spark.sql.DataFrame) =
+      df.select("keys", "newImage").collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    def pointRead() = asMap(SnapshotStore.readKeys(spark, target, lookups))
+    def pointReadDf() = asMap(SnapshotStore.readKeysDf(spark, target, lookups.toDF("keys")))
     // LWW semantics identical to the full read: update wins, tombstone
     // absent, unknown key absent
     assert(pointRead() === Map("k7" -> "v7b", "k9" -> "v9"))
+    assert(pointReadDf() === pointRead())
+    // both point reads apply the key filter / semi-join to the raw
+    // segment rows, under the LWW window
+    def keyedBelowWindow(df: org.apache.spark.sql.DataFrame)(
+        keyOp: PartialFunction[LogicalPlan, Boolean]): Boolean = {
+      val windows = df.queryExecution.optimizedPlan.collect { case w: Window => w }
+      windows.nonEmpty && windows.forall(_.child.exists(keyOp.applyOrElse(_, (_: LogicalPlan) => false)))
+    }
+    assert(keyedBelowWindow(SnapshotStore.readKeys(spark, target, lookups)) {
+      case f: Filter => f.condition.exists(e => e.isInstanceOf[In] || e.isInstanceOf[InSet])
+    })
+    assert(keyedBelowWindow(SnapshotStore.readKeysDf(spark, target, lookups.toDF("keys"))) {
+      case j: Join => j.joinType == LeftSemi
+    })
+    // one shape in every branch: a non-empty read, no lookups, and
+    // lookups whose bucket has no chain all carry the sequence column
+    val shape = Seq("keys", "sequenceNumber", "newImage")
+    assert(SnapshotStore.readKeys(spark, target, lookups).columns.toSeq === shape)
+    assert(SnapshotStore.readKeysDf(spark, target, lookups.toDF("keys")).columns.toSeq === shape)
+    assert(SnapshotStore.readKeys(spark, target, Nil).columns.toSeq === shape)
+    assert(SnapshotStore.readKeysDf(spark, target, Seq.empty[String].toDF("keys"))
+      .columns.toSeq === shape)
+    val single = tmp("pointread-single")
+    SnapshotStore.mergeIntoTarget(spark, single,
+      Seq(("k1", "PUT", "001", "v1")).toDF("keys", "op", "sequenceNumber", "newImage"), 0L)
+    val singleM = SnapshotStore.currentManifest(spark, single).get._2
+    val elsewhere = (2 to 200).map(i => s"k$i").find(k =>
+      !singleM.buckets.contains(graft.sources.SnapshotSource.bucketOf(k, singleM.numBuckets))).get
+    assert(SnapshotStore.readKeys(spark, single, Seq("k1")).columns.toSeq === shape)
+    assert(SnapshotStore.readKeys(spark, single, Seq(elsewhere)).columns.toSeq === shape)
+    assert(SnapshotStore.readKeys(spark, single, Seq(elsewhere)).count() === 0L)
+    assert(SnapshotStore.readKeysDf(spark, single, Seq(elsewhere).toDF("keys"))
+      .columns.toSeq === shape)
     // the pruning is REAL, proven behaviorally: destroy every bucket the
     // lookups do NOT hash to — the point read still completes untouched,
     // while the full read fails loudly on the missing segments
@@ -531,15 +570,22 @@ class StreamingSpec extends SparkSpec {
           .foreach(c => fs.delete(c.getPath, true))
       }
     assert(pointRead() === Map("k7" -> "v7b", "k9" -> "v9"))
+    assert(pointReadDf() === pointRead())
     intercept[Exception] {
-      CdcStream.readTarget(spark, target).collect()
+      SnapshotStore.readTarget(spark, target).collect()
     }
+    // a missing segment of a TOUCHED bucket fails the point read loudly
+    val k7Chain = m.buckets(graft.sources.SnapshotSource.bucketOf("k7", m.numBuckets))
+    fs.delete(new org.apache.hadoop.fs.Path(target, k7Chain.last), true)
+    val e = intercept[IllegalStateException](
+      SnapshotStore.readKeys(spark, target, Seq("k7")).collect())
+    assert(e.getMessage.contains("references missing snapshot data"), e.getMessage)
   }
 
   test("reader resolved just before a compaction completes against grace-retained segments") {
     import spark.implicits._
     val target = tmp("grace-target")
-    CdcStream.writeTarget(
+    SnapshotStore.writeTarget(
       (1 to 40).map(i => (s"k$i", s"v$i")).toDF("keys", "newImage"), target, 0L)
     for (b <- 1 to 3)
       SnapshotStore.mergeIntoTarget(spark, target,
@@ -548,9 +594,9 @@ class StreamingSpec extends SparkSpec {
     val expect = (1 to 40).map(i => s"k$i" -> s"v$i").toMap ++
       (1 to 3).map(i => s"k$i" -> s"u$i")
     // the reader binds its manifest + segment file listing NOW...
-    val inFlight = CdcStream.readTarget(spark, target).select("keys", "newImage")
+    val inFlight = SnapshotStore.readTarget(spark, target).select("keys", "newImage")
     // ...a compaction commits (and GCs) underneath it...
-    CdcStream.compactTarget(spark, target)
+    SnapshotStore.compactTarget(spark, target)
     // ...and the in-flight read still completes: the publish retains the
     // full basis manifest + data (the grace window) precisely for readers
     // that resolved the pointer just before the swap
@@ -560,12 +606,12 @@ class StreamingSpec extends SparkSpec {
     // buckets): a reader two FULL rewrites behind must fail loudly,
     // never silently return partial state. (Append-mode merges reuse
     // chains by reference, so only full compactions age a segment out.)
-    val ancient = CdcStream.readTarget(spark, target).select("keys", "newImage")
+    val ancient = SnapshotStore.readTarget(spark, target).select("keys", "newImage")
     SnapshotStore.compactTarget(spark, target) // rewrite 1: ancient in grace
     SnapshotStore.compactTarget(spark, target) // rewrite 2: ancient's segments GC'd
     intercept[Exception] { ancient.collect() }
     // the LIVE table is intact throughout
-    val now = CdcStream.readTarget(spark, target).select("keys", "newImage")
+    val now = SnapshotStore.readTarget(spark, target).select("keys", "newImage")
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(now === expect)
   }
@@ -573,7 +619,7 @@ class StreamingSpec extends SparkSpec {
   test("cloneTarget forks a consistent snapshot that later writes cannot disturb") {
     import spark.implicits._
     val src = tmp("clone-src"); val dst = tmp("clone-dst")
-    CdcStream.writeTarget(
+    SnapshotStore.writeTarget(
       (1 to 30).map(i => (s"k$i", s"v$i")).toDF("keys", "newImage"), src, 0L)
     SnapshotStore.mergeIntoTarget(spark, src,
       Seq(("k1", "PUT", "001", "u1")).toDF("keys", "op", "sequenceNumber", "newImage"), 1L)
@@ -585,7 +631,7 @@ class StreamingSpec extends SparkSpec {
     SnapshotStore.compactTarget(spark, src) // src GC rewrites src segments
     SnapshotStore.mergeIntoTarget(spark, dst,
       Seq(("k3", "PUT", "003", "w3")).toDF("keys", "op", "sequenceNumber", "newImage"), 2L)
-    def state(dir: String) = CdcStream.readTarget(spark, dir).select("keys", "newImage")
+    def state(dir: String) = SnapshotStore.readTarget(spark, dir).select("keys", "newImage")
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(state(src) === atClone - "k2")            // src moved on
     assert(state(dst) === atClone + ("k3" -> "w3"))  // clone has its own history
@@ -617,7 +663,7 @@ class StreamingSpec extends SparkSpec {
     batches.take(2).zipWithIndex.foreach { case (b, i) =>
       SnapshotStore.mergeIntoTarget(spark, replay, b, i.toLong)
     }
-    def state(dir: String) = CdcStream.readTarget(spark, dir)
+    def state(dir: String) = SnapshotStore.readTarget(spark, dir)
       .select("keys", "newImage")
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(state(restored) === state(replay))
@@ -642,7 +688,7 @@ class StreamingSpec extends SparkSpec {
   test("mergeIntoTarget appends O(delta) segments: untouched chains reused, bytes scale with delta") {
     import spark.implicits._
     val target = tmp("prune-target")
-    CdcStream.writeTarget(
+    SnapshotStore.writeTarget(
       (1 to 200).map(i => (s"k$i", s"v$i")).toDF("keys", "newImage"), target, 0L)
     val before = SnapshotStore.currentManifest(spark, target).get._2.buckets
     assert(before.size > 10) // the seed spans many buckets
@@ -672,7 +718,7 @@ class StreamingSpec extends SparkSpec {
     val deltaBytes = dirs.filter(_.getName.startsWith("data-000000000001")).map(bytesUnder).sum
     assert(deltaBytes > 0 && deltaBytes < seedBytes / 4,
       s"delta publish wrote $deltaBytes bytes vs seed $seedBytes")
-    val state = CdcStream.readTarget(spark, target).select("keys", "newImage")
+    val state = SnapshotStore.readTarget(spark, target).select("keys", "newImage")
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(state === (1 to 200).map(i => s"k$i" -> s"v$i").toMap - "k8" + ("k7" -> "v7b"))
   }
@@ -683,7 +729,7 @@ class StreamingSpec extends SparkSpec {
     // seed 64 keys over 32 buckets, then append FoldThreshold+2 single-key
     // batches to ONE hot key: its bucket's chain must fold rather than
     // grow without bound
-    CdcStream.writeTarget(
+    SnapshotStore.writeTarget(
       (1 to 64).map(i => (s"k$i", s"v$i")).toDF("keys", "newImage"), target, 0L)
     for (b <- 1 to SnapshotStore.FoldThreshold + 2)
       SnapshotStore.mergeIntoTarget(spark, target,
@@ -693,7 +739,7 @@ class StreamingSpec extends SparkSpec {
     assert(m.buckets.values.forall(_.length <= SnapshotStore.FoldThreshold),
       s"a chain exceeded FoldThreshold: ${m.buckets.values.map(_.length).max}")
     // correctness across the fold: hot key has the last write, others intact
-    val state = CdcStream.readTarget(spark, target).select("keys", "newImage")
+    val state = SnapshotStore.readTarget(spark, target).select("keys", "newImage")
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     val expect = (1 to 64).map(i => s"k$i" -> s"v$i").toMap +
       ("k1" -> s"u${SnapshotStore.FoldThreshold + 2}")
@@ -704,7 +750,7 @@ class StreamingSpec extends SparkSpec {
     val wide = (1 to 64).map(i => (s"k$i", "PUT", "900", s"w$i"))
       .toDF("keys", "op", "sequenceNumber", "newImage")
     SnapshotStore.mergeIntoTarget(spark, target, wide, 99L)
-    val state2 = CdcStream.readTarget(spark, target).select("keys", "newImage")
+    val state2 = SnapshotStore.readTarget(spark, target).select("keys", "newImage")
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(state2 === (1 to 64).map(i => s"k$i" -> s"w$i").toMap)
   }
@@ -717,8 +763,8 @@ class StreamingSpec extends SparkSpec {
     java.nio.file.Files.write(lock.toPath, "dead-jvm@nowhere".getBytes)
     assert(lock.setLastModified(System.currentTimeMillis() - SnapshotStore.StaleLockMs - 60000))
     // the writer must break the stale lock instead of waiting forever
-    CdcStream.writeTarget(Seq(("k1", "v1")).toDF("keys", "newImage"), target, 0L)
-    val state = CdcStream.readTarget(spark, target).select("keys", "newImage")
+    SnapshotStore.writeTarget(Seq(("k1", "v1")).toDF("keys", "newImage"), target, 0L)
+    val state = SnapshotStore.readTarget(spark, target).select("keys", "newImage")
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(state === Map("k1" -> "v1"))
     assert(!lock.exists(), "writer lock not released after publish")
@@ -758,7 +804,7 @@ class StreamingSpec extends SparkSpec {
   test("compaction racing the merge sink loses no committed batch") {
     import spark.implicits._
     val target = tmp("race-target")
-    CdcStream.writeTarget(
+    SnapshotStore.writeTarget(
       (1 to 40).map(i => (s"k$i", "v0")).toDF("keys", "newImage"), target, 0L)
     // one thread applies 12 sequential merge batches while another runs
     // repeated full compactions — the exact interleaving the writer lock
@@ -774,13 +820,13 @@ class StreamingSpec extends SparkSpec {
       } catch { case t: Throwable => failures.add(t) }
     }: Runnable, "race-merger")
     val compactor = new Thread({ () =>
-      try { for (_ <- 1 to 5) CdcStream.compactTarget(spark, target) }
+      try { for (_ <- 1 to 5) SnapshotStore.compactTarget(spark, target) }
       catch { case t: Throwable => failures.add(t) }
     }: Runnable, "race-compactor")
     merger.start(); compactor.start()
     merger.join(120000); compactor.join(120000)
     assert(failures.isEmpty, s"concurrent writer threw: ${failures.peek()}")
-    val state = CdcStream.readTarget(spark, target).select("keys", "newImage")
+    val state = SnapshotStore.readTarget(spark, target).select("keys", "newImage")
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     val expect = (1 to 40).map(i => s"k$i" -> "v0").toMap ++
       (1 to 12).map(b => s"k$b" -> s"u$b")
@@ -790,7 +836,7 @@ class StreamingSpec extends SparkSpec {
   test("a displaced writer aborts at the commit point and never deletes the usurper's lock") {
     import spark.implicits._
     val target = tmp("usurp-target")
-    CdcStream.writeTarget(Seq(("k1", "v1")).toDF("keys", "newImage"), target, 0L)
+    SnapshotStore.writeTarget(Seq(("k1", "v1")).toDF("keys", "newImage"), target, 0L)
     val lockFile = new java.io.File(target, SnapshotStore.LockFile)
     val e = intercept[java.util.ConcurrentModificationException] {
       SnapshotStore.withTargetLock(spark, target) {
@@ -809,7 +855,7 @@ class StreamingSpec extends SparkSpec {
       === "usurper@other-jvm")
     lockFile.delete() // the "usurper" releases
     // the aborted publish never moved the pointer
-    val state = CdcStream.readTarget(spark, target).select("keys", "newImage")
+    val state = SnapshotStore.readTarget(spark, target).select("keys", "newImage")
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(state === Map("k1" -> "v1"))
   }
@@ -840,17 +886,17 @@ class StreamingSpec extends SparkSpec {
   test("a compacted table reads as a plain scan; later deltas still resolve over it") {
     import spark.implicits._
     val target = tmp("fastread-target")
-    CdcStream.writeTarget(
+    SnapshotStore.writeTarget(
       (1 to 20).map(i => (s"k$i", s"v$i")).toDF("keys", "newImage"), target, 0L)
     SnapshotStore.mergeIntoTarget(spark, target,
       Seq(("k1", "PUT", "001", "u1")).toDF("keys", "op", "sequenceNumber", "newImage"), 1L)
-    CdcStream.compactTarget(spark, target)
+    SnapshotStore.compactTarget(spark, target)
     // compacted segments carry no op column → readTarget takes the
     // metadata-less fast path: no LWW window, no exchange — a plain scan
     val m = SnapshotStore.currentManifest(spark, target).get._2
     val segs = m.buckets.values.flatten.map(rel => new java.io.File(target, rel).toString)
     assert(!spark.read.parquet(segs.toSeq: _*).columns.contains("op"))
-    val plan = CdcStream.readTarget(spark, target).queryExecution.executedPlan.toString
+    val plan = SnapshotStore.readTarget(spark, target).queryExecution.executedPlan.toString
     assert(!plan.contains("Window") && !plan.contains("Exchange"),
       s"compacted-table read is not a plain scan:\n$plan")
     // a delta appended AFTER compaction outranks the compacted (null-op =
@@ -858,7 +904,7 @@ class StreamingSpec extends SparkSpec {
     SnapshotStore.mergeIntoTarget(spark, target,
       Seq(("k1", "DELETE", "999", null), ("k2", "PUT", "998", "w2"))
         .toDF("keys", "op", "sequenceNumber", "newImage"), 2L)
-    val state = CdcStream.readTarget(spark, target).select("keys", "newImage")
+    val state = SnapshotStore.readTarget(spark, target).select("keys", "newImage")
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(state === (1 to 20).map(i => s"k$i" -> s"v$i").toMap
       - "k1" + ("k2" -> "w2"))
@@ -867,16 +913,16 @@ class StreamingSpec extends SparkSpec {
   test("publish CAS: a pointer moved by a concurrent writer aborts the publish") {
     import spark.implicits._
     val target = tmp("cas-target")
-    CdcStream.writeTarget(Seq(("k1", "v1")).toDF("keys", "newImage"), target, 0L)
+    SnapshotStore.writeTarget(Seq(("k1", "v1")).toDF("keys", "newImage"), target, 0L)
     val staleBasis = SnapshotStore.pointerValue(spark, target)
-    CdcStream.writeTarget(Seq(("k2", "v2")).toDF("keys", "newImage"), target, 1L)
+    SnapshotStore.writeTarget(Seq(("k2", "v2")).toDF("keys", "newImage"), target, 1L)
     // a writer that computed against the batch-0 snapshot must NOT be able
     // to publish over batch 1's commit (the lost-update interleaving)
     val e = intercept[java.util.ConcurrentModificationException] {
       SnapshotStore.casSwapPointer(spark, target, "manifest-bogus", staleBasis)
     }
     assert(e.getMessage.contains("pointer moved"))
-    val state = CdcStream.readTarget(spark, target).select("keys", "newImage")
+    val state = SnapshotStore.readTarget(spark, target).select("keys", "newImage")
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(state === Map("k2" -> "v2")) // batch 1's commit survived intact
   }
@@ -884,10 +930,10 @@ class StreamingSpec extends SparkSpec {
   test("readTarget fails loudly when the pointer names a missing snapshot") {
     val target = tmp("lost-target")
     java.nio.file.Files.write(
-      new java.io.File(target, CdcStream.CurrentPointer).toPath,
+      new java.io.File(target, SnapshotStore.CurrentPointer).toPath,
       "snap-000000000007-dead".getBytes)
     val e = intercept[IllegalStateException] {
-      CdcStream.readTarget(spark, target).select("keys", "newImage")
+      SnapshotStore.readTarget(spark, target).select("keys", "newImage")
     }
     assert(e.getMessage.contains("missing snapshot"))
   }
@@ -906,7 +952,7 @@ class StreamingSpec extends SparkSpec {
       CdcStream.cdcFileSource(spark, in),
       target, ckpt, dlq, trigger = Trigger.AvailableNow()).start()
     q.awaitTermination(60000)
-    val state = CdcStream.readTarget(spark, target).select("keys", "newImage")
+    val state = SnapshotStore.readTarget(spark, target).select("keys", "newImage")
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     // lexicographic would keep k1="old"; raw (length,value) would keep
     // k2="old" ("005" is longer than "10")
@@ -930,7 +976,7 @@ class StreamingSpec extends SparkSpec {
     val dead = spark.read.parquet(dlq).collect()
     assert(dead.map(_.getAs[String]("eventID")).sorted.toSeq == Seq("e2", "e3"))
     assert(dead.forall(_.getAs[String]("error").startsWith("poison")))
-    val state = CdcStream.readTarget(spark, target).select("keys", "newImage")
+    val state = SnapshotStore.readTarget(spark, target).select("keys", "newImage")
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(state === Map("k1" -> "v1")) // k4's REMOVE applied as a no-op, not deadlettered
   }
@@ -954,7 +1000,7 @@ class StreamingSpec extends SparkSpec {
     val dead = spark.read.parquet(dlq).collect()
     assert(dead.length == 2, s"expected 2 deadlettered rows, got ${dead.toSeq}")
     assert(dead.forall(_.getAs[String]("error").startsWith("poison: malformed")))
-    val state = CdcStream.readTarget(spark, target).select("keys", "newImage")
+    val state = SnapshotStore.readTarget(spark, target).select("keys", "newImage")
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(state === Map("k1" -> "v1")) // the valid record still applied
   }
@@ -1003,7 +1049,7 @@ class StreamingSpec extends SparkSpec {
     assert(dlqFiles.forall(f => !f.getName.endsWith(".parquet")),
       s"shutdown-interrupted batch was deadlettered: ${
         dlqFiles.map(f => s"${f.getName}(${f.length}B)").mkString("; ")}")
-    val state = CdcStream.readTarget(spark, target).select("keys", "newImage")
+    val state = SnapshotStore.readTarget(spark, target).select("keys", "newImage")
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(state === Map("k1" -> "c", "k3" -> "x")) // exact LWW oracle; k2 removed
     // and a third run over the same checkpoint is a no-op (all committed)
@@ -1011,7 +1057,7 @@ class StreamingSpec extends SparkSpec {
       CdcStream.cdcFileSource(spark, in, maxFilesPerTrigger = 1),
       target, ckpt, dlq, trigger = Trigger.AvailableNow()).start()
     q3.awaitTermination(60000)
-    val state2 = CdcStream.readTarget(spark, target).select("keys", "newImage")
+    val state2 = SnapshotStore.readTarget(spark, target).select("keys", "newImage")
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(state2 === state)
   }
@@ -1050,7 +1096,7 @@ class StreamingSpec extends SparkSpec {
       CdcStream.cdcFileSource(spark, in, maxFilesPerTrigger = 1),
       target, ckpt, dlq, trigger = Trigger.AvailableNow()).start()
     q.awaitTermination(60000)
-    val state = CdcStream.readTarget(spark, target).select("keys", "newImage")
+    val state = SnapshotStore.readTarget(spark, target).select("keys", "newImage")
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(state === Map("k1" -> "new"))
   }
@@ -1205,7 +1251,7 @@ class StreamingSpec extends SparkSpec {
     val q1 = CdcStream.applySink(conn.stream(spark), target, ckpt, dlq,
       trigger = Trigger.AvailableNow()).start()
     q1.awaitTermination(60000)
-    def state() = CdcStream.readTarget(spark, target).select("keys", "newImage")
+    def state() = SnapshotStore.readTarget(spark, target).select("keys", "newImage")
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(state() === Map("k1" -> "vk1", "k2" -> "vk2", "k3" -> "vk3", "k4" -> "vk4"))
 
@@ -1339,7 +1385,7 @@ class StreamingSpec extends SparkSpec {
     val q = CdcStream.applySink(conn.stream(spark), target, ckpt, dlq,
       trigger = Trigger.AvailableNow()).start()
     q.awaitTermination(60000)
-    val state = CdcStream.readTarget(spark, target).select("keys", "newImage")
+    val state = SnapshotStore.readTarget(spark, target).select("keys", "newImage")
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(state === Map("k1" -> "uk1", "k2" -> "uk2", "k3" -> "wk3", "k4" -> "wk4"))
   }
@@ -1823,7 +1869,7 @@ class StreamingSpec extends SparkSpec {
 
     val target = tmp("sock-target"); val ckpt = tmp("sock-ckpt"); val dlq = tmp("sock-dlq")
     def targetState(): Map[String, String] =
-      CdcStream.readTarget(spark, target).select("keys", "newImage")
+      SnapshotStore.readTarget(spark, target).select("keys", "newImage")
         .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     def awaitState(expect: Map[String, String], timeoutMs: Long = 120000): Unit = {
       val deadline = System.currentTimeMillis() + timeoutMs

@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.streaming.{CdcStream, TableConstraints}
+import graft.streaming.{CdcStream, SnapshotStore, TableConstraints}
 import graft.streaming.TableConstraints.Check
 
 /** Write-time CHECK constraints with quarantine (r15, VERDICT r14 #6):
@@ -54,7 +54,7 @@ class TableConstraintsSpec extends SparkSpec {
     q.awaitTermination(60000)
 
     // target: clean rows only — the violating writes never reached it
-    val state = CdcStream.readTarget(spark, target).select("keys", "newImage")
+    val state = SnapshotStore.readTarget(spark, target).select("keys", "newImage")
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(state === Map("k1" -> "v1", "k3" -> "w1"))
 
@@ -83,7 +83,7 @@ class TableConstraintsSpec extends SparkSpec {
       target, ckpt, dlq, trigger = Trigger.AvailableNow(),
       quarantineDir = quarantine).start()
     q2.awaitTermination(60000)
-    val state2 = CdcStream.readTarget(spark, target).select("keys", "newImage")
+    val state2 = SnapshotStore.readTarget(spark, target).select("keys", "newImage")
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(state2 === Map("k2" -> "ok", "k3" -> "w1"))
   }
@@ -104,7 +104,7 @@ class TableConstraintsSpec extends SparkSpec {
       target, ckpt, dlq, trigger = Trigger.AvailableNow(),
       quarantineDir = tmp("tcn-quarantine")).start()
     q.awaitTermination(60000)
-    val keys = CdcStream.readTarget(spark, target).select("keys")
+    val keys = SnapshotStore.readTarget(spark, target).select("keys")
       .collect().map(_.getString(0)).toSet
     assert(keys === Set("k1"), "non-JSON image must PASS (NULL check), " +
       "negative qty must quarantine")
