@@ -101,6 +101,10 @@ private[sources] class SnapshotChangesStream(path: String) extends MicroBatchStr
 
   /** Segment sets of the two offsets; a missing (pruned) start manifest
     * degrades to the empty base — the documented at-least-once window.
+    * A fresh L1 segment is read in its bucket's partition; a fresh L0 in
+    * one partition of its own, for exactly the buckets whose end chain
+    * lists it, so each of its rows is delivered once (a bucket that
+    * folded since re-delivers through its fold output instead).
     */
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val endName = end.asInstanceOf[VersionOffset].name
@@ -114,12 +118,18 @@ private[sources] class SnapshotChangesStream(path: String) extends MicroBatchStr
       if (startName.isEmpty) Set.empty
       else SnapshotStore.manifestNamed(spark, path, startName)
         .map(_.buckets.values.flatten.toSet).getOrElse(Set.empty)
-    endM.buckets.toSeq.sortBy(_._1).flatMap { case (b, segs) =>
-      val fresh = segs.filterNot(baseSegs.contains)
-      if (fresh.isEmpty) None
-      else Some(SnapshotChangesPartition(b, endName,
-        fresh.map(new Path(path, _).toString)): InputPartition)
-    }.toArray
+    val fresh = endM.buckets.toSeq.sortBy(_._1).flatMap { case (b, segs) =>
+      segs.filterNot(baseSegs.contains).map(_ -> b)
+    }
+    val (l0, l1) = fresh.partition { case (seg, _) => SnapshotStore.isL0(seg) }
+    def full(rel: String) = new Path(path, rel).toString
+    val perBucket = l1.groupBy(_._2).toSeq.sortBy(_._1).map { case (b, segs) =>
+      SnapshotChangesPartition(endName, segs.map(s => full(s._1)), Set(b))
+    }
+    val shared = l0.groupBy(_._1).toSeq.sortBy(_._1).map { case (seg, bs) =>
+      SnapshotChangesPartition(endName, Seq(full(seg)), bs.map(_._2).toSet)
+    }
+    (perBucket ++ shared).toArray[InputPartition]
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {
@@ -133,8 +143,9 @@ private[sources] class SnapshotChangesStream(path: String) extends MicroBatchStr
   }
 }
 
+/** `buckets`: whose rows of `segmentDirs` this partition delivers. */
 private[sources] case class SnapshotChangesPartition(
-    bucket: Int, version: String, segmentDirs: Seq[String]) extends InputPartition
+    version: String, segmentDirs: Seq[String], buckets: Set[Int]) extends InputPartition
 
 /** Raw delta rows — no resolve: a change feed delivers what was written.
   * Rows stream lazily file-by-file, row-group-by-row-group (memory is
@@ -155,7 +166,7 @@ private[sources] class SnapshotChangesReader(p: SnapshotChangesPartition,
     p.segmentDirs.iterator
       .flatMap(dir => ParquetSegments.listParquet(conf, dir).iterator)
       .flatMap { file =>
-        val it = new ParquetSegments.RowGroupIterator(conf, file)
+        val it = new ParquetSegments.RowGroupIterator(conf, file, p.buckets)
         open = it
         it
       }

@@ -19,8 +19,10 @@ import graft.streaming.SnapshotStore
   * write.
   *
   * Sequence discipline (the part that makes the statement WIN its own
-  * LWW race): the row id is the COMPOSITE (keys, sequenceNumber), so
-  * every callback knows the sequence of the row version it read —
+  * LWW race): the row id is the COMPOSITE (keys, `_read_seq`) — the
+  * read sequence as a non-nullable metadata column, "" for a
+  * metadata-less seed row — so every callback knows the sequence of the
+  * row version it read —
   *   - DELETE emits a tombstone at read-seq + "0" (appending a digit
   *     strictly raises the numeric-string order for ANY value: the
   *     canonical form gains a digit, so its length class increases);
@@ -73,7 +75,7 @@ private[sources] class SnapshotRowLevelOp(
     new SnapshotScanBuilder(path, tableSchema = tableSchema)
 
   override def rowId(): Array[NamedReference] =
-    Array(Expressions.column("keys"), Expressions.column("sequenceNumber"))
+    Array(Expressions.column("keys"), Expressions.column(SnapshotSource.ReadSeqCol))
 
   override def representUpdateAsDeleteAndInsert(): Boolean = true
 
@@ -163,7 +165,7 @@ private[sources] class SnapshotDeltaWriterFactory(
 /** Translates delta callbacks to canonical 4-column delta rows staged
   * through the shared parquet writer. `rowCols` is the ROW schema the
   * operation delivers (a projection of keys/sequenceNumber/newImage);
-  * the id struct is always (keys, sequenceNumber) per [[rowId]].
+  * the id struct is always (keys, `_read_seq`) per [[rowId]].
   */
 private[sources] class SnapshotDeltaRowWriter(
     file: String, rowCols: Seq[String],
@@ -191,7 +193,7 @@ private[sources] class SnapshotDeltaRowWriter(
         if (img == null) null else utf8(img))))
 
   override def delete(meta: InternalRow, id: InternalRow): Unit =
-    // id = (keys, sequenceNumber) of the version read; "0" appended
+    // id = (keys, read sequence) of the version read; "0" appended
     // strictly outranks it
     emit(id.getUTF8String(0).toString, "DELETE",
       id.getUTF8String(1).toString + "0", null)
@@ -201,7 +203,7 @@ private[sources] class SnapshotDeltaRowWriter(
     // (read-seq + "0"), so land at read-seq + "00"
     needRowCols()
     emit(str(row, keysIdx), Option(str(row, opIdx)).getOrElse("PUT"),
-      str(row, seqIdx) + "00", str(row, imgIdx))
+      Option(str(row, seqIdx)).getOrElse("") + "00", str(row, imgIdx))
   }
 
   override def insert(row: InternalRow): Unit = {

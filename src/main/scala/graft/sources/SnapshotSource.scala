@@ -9,6 +9,8 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
+import org.apache.parquet.filter2.compat.FilterCompat
+import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.ColumnIOFactory
@@ -90,17 +92,20 @@ class SnapshotSource extends TableProvider
 }
 
 object SnapshotSource {
+  /** Metadata column: the resolved row's sequence, "" for null. */
+  val ReadSeqCol = "_read_seq"
+
   /** Resolved-state schema of the canonical store layout (r11: includes
     * `op` — the surviving row's operation, and the column that lets SQL
     * INSERT align against the table schema with no ACCEPT_ANY_SCHEMA
-    * escape hatch; keys/op/sequenceNumber are non-nullable, which is
-    * both true of resolved state and REQUIRED for the row-id columns of
-    * the row-level operations).
+    * escape hatch). keys/op are non-nullable; sequenceNumber is null
+    * for a metadata-less seed row, so the row-level operations take the
+    * read sequence from the non-nullable `_read_seq` metadata column).
     */
   val Schema: StructType = StructType(Seq(
     StructField("keys", StringType, nullable = false),
     StructField("op", StringType, nullable = false),
-    StructField("sequenceNumber", StringType, nullable = false),
+    StructField("sequenceNumber", StringType, nullable = true),
     StructField("newImage", StringType, nullable = true)))
 
   /** Driver/executor-shared mirror of the store's bucket function:
@@ -177,18 +182,25 @@ private[sources] class SnapshotTable(path: String,
     * questions one query ("is this key set skewed across buckets",
     * "which bucket does this hot key live in") instead of a
     * hand-computed hash. Costs nothing to serve: the value IS the
-    * reader's partition id.
+    * reader's partition id. `_read_seq` — the row's sequenceNumber, ""
+    * when it has none: the non-nullable half of the row-level
+    * operations' row id.
     */
   override def metadataColumns()
-      : Array[org.apache.spark.sql.connector.catalog.MetadataColumn] =
-    Array(new org.apache.spark.sql.connector.catalog.MetadataColumn {
-      override def name(): String = "_bucket"
-      override def dataType(): org.apache.spark.sql.types.DataType =
-        org.apache.spark.sql.types.IntegerType
-      override def isNullable: Boolean = false
-      override def comment(): String =
-        "manifest bucket of the row's key: pmod(xxhash64(keys), numBuckets)"
-    })
+      : Array[org.apache.spark.sql.connector.catalog.MetadataColumn] = {
+    def meta(n: String, t: org.apache.spark.sql.types.DataType, doc: String) =
+      new org.apache.spark.sql.connector.catalog.MetadataColumn {
+        override def name(): String = n
+        override def dataType(): org.apache.spark.sql.types.DataType = t
+        override def isNullable: Boolean = false
+        override def comment(): String = doc
+      }
+    Array(
+      meta("_bucket", org.apache.spark.sql.types.IntegerType,
+        "manifest bucket of the row's key: pmod(xxhash64(keys), numBuckets)"),
+      meta(SnapshotSource.ReadSeqCol, StringType,
+        "the row's sequenceNumber, empty when it has none"))
+  }
 
   /** MERGE INTO / UPDATE / complex-predicate DELETE (r11): the
     * delta-based row-level contract — see
@@ -362,11 +374,12 @@ private[sources] class SnapshotScanBuilder(path: String,
     * winner for any key can hide in any segment) but each bucket then
     * emits only its n best rows through a bounded heap — a top-10 over
     * a 100 TB table ships |buckets|·10 rows into Spark's global TopN
-    * instead of the resolved state. Accepted orderings: the always-
-    * non-null base string columns (keys / op / sequenceNumber), any
-    * direction — so null ordering can't diverge. Projected (schema-
-    * evolution) columns, newImage (nullable), and _bucket are refused
-    * and fall back to the ordinary scan.
+    * instead of the resolved state. Accepted orderings: the base
+    * string columns (keys / op / sequenceNumber), either direction with
+    * its default null ordering (ASC NULLS FIRST, DESC NULLS LAST — the
+    * heap orders a metadata-less row's null sequence lowest). Projected
+    * (schema-evolution) columns, newImage, and _bucket are refused and
+    * fall back to the ordinary scan.
     */
   override def pushTopN(
       orders: Array[org.apache.spark.sql.connector.expressions.SortOrder],
@@ -376,7 +389,8 @@ private[sources] class SnapshotScanBuilder(path: String,
     val cols: Seq[Option[(String, Boolean)]] = orders.toSeq.map { o =>
       o.expression() match {
         case nr: NamedReference if nr.fieldNames.length == 1 &&
-            sortable.contains(nr.fieldNames()(0)) =>
+            sortable.contains(nr.fieldNames()(0)) &&
+            o.nullOrdering() == o.direction().defaultNullOrdering() =>
           Some((nr.fieldNames()(0),
             o.direction() == SortDirection.DESCENDING))
         case _ => None
@@ -423,8 +437,9 @@ private[sources] class SnapshotScanBuilder(path: String,
           Some(SnapshotAggScan.AggCol("count_star", None))
         case c: Count if !c.isDistinct =>
           // count(col) = row count only for the NON-NULLABLE columns;
-          // newImage can be null, so it is refused (falls back to rows)
-          col(c.column).filter(_ != "newImage")
+          // newImage and sequenceNumber can be null, so they are refused
+          // (fall back to rows)
+          col(c.column).filter(n => n == "keys" || n == "op")
             .map(n => SnapshotAggScan.AggCol("count", Some(n)))
         case m: Min => col(m.column).map(n => SnapshotAggScan.AggCol("min", Some(n)))
         case m: Max => col(m.column).map(n => SnapshotAggScan.AggCol("max", Some(n)))
@@ -512,13 +527,14 @@ private[graft] class SnapshotScan(path: String, required: StructType,
   private lazy val listedBytes: Long = {
     val spark = SparkSession.active
     val conf = spark.sessionState.newHadoopConf()
-    planInputPartitions().collect {
-      case SnapshotInputPartition(_, dirs, _) => dirs.map { d =>
-        val p = new Path(d)
-        val fs = p.getFileSystem(conf)
-        if (!fs.exists(p)) 0L
-        else fs.listStatus(p).filter(_.isFile).map(_.getLen).sum
-      }.sum
+    // a shared L0 is listed by many planned buckets: count it once
+    planInputPartitions().toSeq.collect {
+      case SnapshotInputPartition(_, dirs, _) => dirs
+    }.flatten.distinct.map { d =>
+      val p = new Path(d)
+      val fs = p.getFileSystem(conf)
+      if (!fs.exists(p)) 0L
+      else fs.listStatus(p).filter(_.isFile).map(_.getLen).sum
     }.sum
   }
 
@@ -668,7 +684,7 @@ private[graft] class SnapshotScan(path: String, required: StructType,
               if (zoneFilters.isEmpty) Seq.fill(segs.length)(false)
               else segs.map { seg =>
                 !ZonePrune.segmentCanSatisfy(zoneFilters,
-                  m.zoneMaps.getOrElse(seg, Nil), projTypes)
+                  m.zoneMaps.getOrElse(SnapshotStore.zoneKey(seg, b), Nil), projTypes)
               }
             if (segs.nonEmpty && excl.forall(identity) && zoneFilters.nonEmpty)
               None
@@ -825,7 +841,7 @@ private[sources] class SnapshotAggPartitionReader(
     val maxs = mutable.HashMap.empty[String, UTF8String]
     val needMin = cols.collect { case SnapshotAggScan.AggCol("min", Some(c)) => c }.toSet
     val needMax = cols.collect { case SnapshotAggScan.AggCol("max", Some(c)) => c }.toSet
-    SnapshotResolve.resolvedEx(p.segmentDirs, Nil, conf).foreach {
+    SnapshotResolve.resolvedEx(p.bucket, p.segmentDirs, Nil, conf).foreach {
       case (k, op, seq, img, _) =>
         n += 1
         val vals = Map("keys" -> k, "op" -> op, "sequenceNumber" -> seq,
@@ -869,12 +885,18 @@ private[sources] object SnapshotResolve {
   // key -> (ordKey, op, seq, image)
   type Ord = (Int, String, Int, String)
 
-  def ordKey(seq: String): Ord = {
-    val (cl, canon) = graft.ops.CdcOps.numericStringKey(seq)
-    (cl, canon, seq.length, seq)
-  }
+  /** A null sequence (a metadata-less seed row) orders below every
+    * rendered one, so it loses to any real delta — the write side's
+    * `numericStringOrder` rule.
+    */
+  def ordKey(seq: String): Ord =
+    if (seq == null) (-1, "", -1, "")
+    else {
+      val (cl, canon) = graft.ops.CdcOps.numericStringKey(seq)
+      (cl, canon, seq.length, seq)
+    }
 
-  /** Replay a bucket's segment chain; yields resolved LIVE rows
+  /** Replay bucket `bucket`'s segment chain; yields resolved LIVE rows
     * (keys, op, sequenceNumber, newImage, excluded) — tombstones
     * dropped — with per-segment image exclusion (r13 zone maps) and
     * an optional exact key set: rows of other keys are dropped as they
@@ -892,7 +914,7 @@ private[sources] object SnapshotResolve {
     * and a newer WINNER from nobody (the flag drops exactly the rows
     * the filter would).
     */
-  def resolvedEx(segmentDirs: Seq[String], imageExcluded: Seq[Boolean],
+  def resolvedEx(bucket: Int, segmentDirs: Seq[String], imageExcluded: Seq[Boolean],
                  conf: Configuration, keys: Option[Set[String]] = None)
       : Iterator[(String, String, String, String, Boolean)] = {
     if (segmentDirs.isEmpty) return Iterator.empty
@@ -904,7 +926,8 @@ private[sources] object SnapshotResolve {
       skipImg = imageExcluded.lift(di).getOrElse(false)
       st <- fs.listStatus(new Path(dir)).toSeq.sortBy(_.getPath.getName)
       if st.isFile && st.getPath.getName.endsWith(".parquet")
-    } ParquetSegments.foreachRow(conf, st.getPath, skipImg, keys) { (k, op, seq, img) =>
+    } ParquetSegments.foreachRow(conf, st.getPath, Set(bucket), skipImg, keys) {
+      (k, op, seq, img) =>
       val ord = ordKey(seq)
       val better = state.get(k).forall { case (o, _, _, _, _) =>
         Ordering[Ord].gt(ord, o)
@@ -1025,7 +1048,7 @@ private[sources] class SnapshotPartitionReader(
     // a `SELECT _bucket` scan was paying a full Jackson parse per row
     // whose result was never read).
     val needJson = fields.exists(f =>
-      f.name != "_bucket" &&
+      f.name != "_bucket" && f.name != SnapshotSource.ReadSeqCol &&
         !SnapshotSource.Schema.fieldNames.contains(f.name))
     val mapper =
       if (needJson) new com.fasterxml.jackson.databind.ObjectMapper else null
@@ -1033,7 +1056,7 @@ private[sources] class SnapshotPartitionReader(
     // segment's stats prove their values fail the pushed filters (the
     // residual filter above the scan would discard them anyway)
     val tuples = SnapshotResolve
-      .resolvedEx(p.segmentDirs, p.imageExcluded, conf, keys)
+      .resolvedEx(p.bucket, p.segmentDirs, p.imageExcluded, conf, keys)
       .collect { case (k, op, seq, img, false) => (k, op, seq, img) }
     // partial TOP-N pushdown: keep this bucket's n best under the pushed
     // ordering through a bounded heap (memory O(n), not O(bucket)).
@@ -1047,6 +1070,9 @@ private[sources] class SnapshotPartitionReader(
     val pruned = topN match {
       case Some((ord, n)) =>
         def cmpStr(a: String, b: String): Int = {
+          // only a sequence can be null; null orders lowest
+          if (a == null || b == null)
+            return (if (a == null) 0 else 1) - (if (b == null) 0 else 1)
           val x = a.getBytes(java.nio.charset.StandardCharsets.UTF_8)
           val y = b.getBytes(java.nio.charset.StandardCharsets.UTF_8)
           var i = 0
@@ -1100,6 +1126,7 @@ private[sources] class SnapshotPartitionReader(
             // the _bucket METADATA column is the partition's own id
             // (one bucket per input partition by construction)
             case "_bucket" => java.lang.Integer.valueOf(p.bucket)
+            case SnapshotSource.ReadSeqCol => UTF8String.fromString(Option(seq).getOrElse(""))
             case n => JsonProjection.extract(node, n, f.dataType)
           }
         }
@@ -1214,14 +1241,17 @@ private[graft] object ParquetSegments {
     * on a new default Hadoop configuration for every file, measured at
     * ~12 ms an open against under 1 ms this way.
     */
-  def open(conf: Configuration, file: Path): ParquetFileReader =
-    new ParquetFileReader(HadoopInputFile.fromPath(file, conf),
-      HadoopReadOptions.builder(conf, file).build())
+  def open(conf: Configuration, file: Path,
+           filter: Option[FilterPredicate] = None): ParquetFileReader = {
+    val opts = HadoopReadOptions.builder(conf, file)
+    filter.foreach(f => opts.withRecordFilter(FilterCompat.get(f)))
+    new ParquetFileReader(HadoopInputFile.fromPath(file, conf), opts.build())
+  }
 
-  def foreachRow(conf: Configuration, file: Path,
+  def foreachRow(conf: Configuration, file: Path, buckets: Set[Int],
                  skipImage: Boolean = false, keys: Option[Set[String]] = None)
                 (f: (String, String, String, String) => Unit): Unit = {
-    val it = new RowGroupIterator(conf, file, skipImage, keys)
+    val it = new RowGroupIterator(conf, file, buckets, skipImage, keys)
     try it.foreach(_.foreach { case (k, op, seq, img) => f(k, op, seq, img) })
     finally it.close()
   }
@@ -1232,13 +1262,31 @@ private[graft] object ParquetSegments {
     * let alone a whole partition's segment chain. The file handle closes
     * itself at exhaustion; a consumer that abandons mid-file must call
     * `close()` (the change-feed PartitionReader does, from its own
-    * close()). Given `keys`, only those keys' rows are yielded.
+    * close()). Given `keys`, only those keys' rows are yielded. A null
+    * sequence (a metadata-less row) is yielded as null.
+    *
+    * `buckets` are the buckets the caller reads this file for, and is
+    * the one place the store's visibility rule is enforced: an L0 file
+    * holds many buckets' rows (a physical `__bucket` column), and only
+    * rows of `buckets` are yielded — pushed into parquet-mr as a
+    * `__bucket` filter, so row-group statistics and the page index skip
+    * other buckets, then checked exactly per row. An L1 file is one
+    * bucket's segment, and `buckets` does not filter it.
     */
-  final class RowGroupIterator(conf: Configuration, file: Path,
+  final class RowGroupIterator(conf: Configuration, file: Path, buckets: Set[Int],
                                skipImage: Boolean = false,
                                keys: Option[Set[String]] = None)
       extends Iterator[Seq[(String, String, String, String)]] with AutoCloseable {
-    private var reader: ParquetFileReader = open(conf, file)
+    private val shared = SnapshotStore.isL0(file.getParent.toString)
+    private var reader: ParquetFileReader = open(conf, file, Option.when(shared) {
+      val c = FilterApi.intColumn(SnapshotStore.BucketCol)
+      if (buckets.size == 1) FilterApi.eq(c, Int.box(buckets.head))
+      else FilterApi.in(c, buckets.map(Int.box).asJava)
+    })
+    private def nextPages() =
+      if (reader == null) null
+      else if (shared) reader.readNextFilteredRowGroup()
+      else reader.readNextRowGroup()
     // zone-map image exclusion (r13): project the image column OUT of
     // the requested schema, so its pages are never read from storage —
     // resolution only needs (keys, op, sequenceNumber) from this file
@@ -1254,11 +1302,12 @@ private[graft] object ParquetSegments {
     }
     private def idx(n: String): Int =
       if (schema.containsField(n)) schema.getFieldIndex(n) else -1
-    private val (ki, oi, si, ii) =
-      (idx("keys"), idx("op"), idx("sequenceNumber"), idx("newImage"))
+    private val (ki, oi, si, ii, bi) = (idx("keys"), idx("op"),
+      idx("sequenceNumber"), idx("newImage"), idx(SnapshotStore.BucketCol))
     require(ki >= 0, s"segment $file has no 'keys' column")
+    require(!shared || bi >= 0, s"L0 segment $file has no '${SnapshotStore.BucketCol}' column")
     private val colIO = new ColumnIOFactory().getColumnIO(schema)
-    private var pages = reader.readNextRowGroup()
+    private var pages = nextPages()
     if (pages == null) close()
 
     override def hasNext: Boolean = pages != null
@@ -1277,12 +1326,12 @@ private[graft] object ParquetSegments {
           else null
         val k = str(ki)
         // a row of an unwanted key costs its key string only
-        if (k != null && keys.forall(_.contains(k)))
-          out += ((k, Option(str(oi)).getOrElse("PUT"),
-            Option(str(si)).getOrElse(""), str(ii)))
+        if (k != null && keys.forall(_.contains(k)) &&
+            (bi < 0 || buckets.contains(g.getInteger(bi, 0))))
+          out += ((k, Option(str(oi)).getOrElse("PUT"), str(si), str(ii)))
         i += 1
       }
-      pages = if (reader == null) null else reader.readNextRowGroup()
+      pages = nextPages()
       if (pages == null) close()
       out.result()
     }

@@ -225,11 +225,13 @@ object CdcStream {
     * batch that fails mid-write — including inside the retry loop — leaves
     * the previous snapshot live, never a partial or empty table. Per-batch
     * cost is O(|delta|), NOT O(|target|) and not even O(|touched
-    * buckets|): the delta is APPENDED as merge-on-read segments and
-    * resolved by readers' LWW pass, with per-bucket chains folded at
-    * [[SnapshotStore.FoldThreshold]] — the reference's own cost model
-    * (`batch_write_item` is key-addressed,
-    * app/lambdas/lambda-backfill/main.py:44-46).
+    * buckets|): the delta is APPENDED as one merge-on-read L0 segment
+    * (one file per delta partition, one write job, no shuffle) listed by
+    * every touched bucket's chain and resolved by readers' LWW pass, with
+    * per-bucket chains folded to L1 at [[SnapshotStore.FoldThreshold]] —
+    * the reference's own cost model (`batch_write_item` is key-addressed,
+    * app/lambdas/lambda-backfill/main.py:44-46). Each phase's jobs carry
+    * a [[SnapshotStore.Phase]] label in their job description.
     *
     * `compactEvery = n` (> 0) runs a best-effort full compaction every n
     * batches ON THE SINK THREAD — the one place it can never race this
@@ -264,20 +266,25 @@ object CdcStream {
         // batch reused twice; the poison count rides on the checkpoint's
         // own job instead of a separate emptiness probe
         val poisonSeen = Observation()
-        val full = batch.toDF()
-          .observe(poisonSeen, count(when(isPoison, true)).as("poison"))
-          .localCheckpoint(true)
+        val full = SnapshotStore.inPhase(spark, SnapshotStore.Phase.BatchCheckpoint) {
+          batch.toDF()
+            .observe(poisonSeen, count(when(isPoison, true)).as("poison"))
+            .localCheckpoint(true)
+        }
+        def deadLetter(rows: DataFrame, dir: String): Unit =
+          SnapshotStore.inPhase(spark, SnapshotStore.Phase.DeadLetter) {
+            rows.withColumn("batchId", lit(batchId)).write.mode("append").parquet(dir)
+          }
         try {
           if (poisonSeen.get("poison").asInstanceOf[Long] > 0)
-            full.filter(isPoison)
+            deadLetter(full.filter(isPoison)
               .withColumn("error",
                 when(col("keys").isNull || col("eventName").isNull ||
                     col("sequenceNumber").isNull,
                   lit("poison: malformed record (unparseable line or missing key fields)"))
                   .when(col("newImage").isNull, lit("poison: PUT without image"))
-                  .otherwise(lit(s"poison: image exceeds $MaxImageBytes-byte queue budget")))
-              .withColumn("batchId", lit(batchId))
-              .write.mode("append").parquet(deadletterDir)
+                  .otherwise(lit(s"poison: image exceeds $MaxImageBytes-byte queue budget"))),
+              deadletterDir)
           val checks = TableConstraints.read(
             spark.sessionState.newHadoopConf(), targetDir)
           val valid = if (checks.isEmpty) full.filter(!isPoison) else {
@@ -287,11 +294,13 @@ object CdcStream {
             // expression per consumer; the violation count is observed
             // on that checkpoint's job.
             val violationSeen = Observation()
-            val flagged = full.filter(!isPoison)
-              .withColumn("_check_violation",
-                TableConstraints.violationCol(checks))
-              .observe(violationSeen, count(col("_check_violation")).as("bad"))
-              .localCheckpoint(true)
+            val flagged = SnapshotStore.inPhase(spark, SnapshotStore.Phase.BatchCheckpoint) {
+              full.filter(!isPoison)
+                .withColumn("_check_violation",
+                  TableConstraints.violationCol(checks))
+                .observe(violationSeen, count(col("_check_violation")).as("bad"))
+                .localCheckpoint(true)
+            }
             // Quarantine delivery contract (same as deadletter): AT LEAST
             // ONCE. The audit append lands before the merge, so a merge
             // failure + foreachBatch retry re-appends the same batch's
@@ -299,14 +308,11 @@ object CdcStream {
             // (keys, sequenceNumber, batchId) — unique per logical CDC
             // record and stable across retries.
             if (violationSeen.get("bad").asInstanceOf[Long] > 0)
-              flagged.filter(col("_check_violation").isNotNull)
+              deadLetter(flagged.filter(col("_check_violation").isNotNull)
                 .withColumn("error",
                   concat(lit("check violation: "), col("_check_violation")))
-                .drop("_check_violation")
-                .withColumn("batchId", lit(batchId))
-                .write.mode("append")
-                .parquet(if (quarantineDir != null) quarantineDir
-                         else deadletterDir)
+                .drop("_check_violation"),
+                if (quarantineDir != null) quarantineDir else deadletterDir)
             flagged.filter(col("_check_violation").isNull)
               .drop("_check_violation")
           }
@@ -355,10 +361,7 @@ object CdcStream {
             case e: SnapshotStore.LockTimeoutException => throw e
             case e: java.util.ConcurrentModificationException => throw e
             case scala.util.control.NonFatal(e) =>
-              valid
-                .withColumn("error", lit(e.getMessage))
-                .withColumn("batchId", lit(batchId))
-                .write.mode("append").parquet(deadletterDir)
+              deadLetter(valid.withColumn("error", lit(e.getMessage)), deadletterDir)
           }
         } finally {
           // the eager checkpoint pins blocks in the block manager; a 5 s

@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.nio.charset.StandardCharsets
 
-import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileContext, FileSystem, Options, Path}
 import org.apache.spark.sql.SparkSession
 
 /** The atomic primitive the commit-log protocol is built on: create
@@ -204,10 +204,22 @@ private[graft] object CommitProtocol {
     try out.write(content.getBytes(StandardCharsets.UTF_8)) finally out.close()
   }
 
-  /** A target's named metadata file read to EOF; None when absent. */
-  def read(fs: FileSystem, targetDir: Path, name: String): Option[String] =
-    try Some(readFully(fs, new Path(targetDir, name)))
+  /** A target's named metadata file read to EOF; None when absent.
+    * Read past a checksummed filesystem's checksum layer: `replace`
+    * renames a tmp over the file, and a `ChecksumFileSystem` (the local
+    * `file://` one) renames the data file and its `.crc` sidecar
+    * separately, so a reader between the two renames would check the new
+    * bytes against the old checksum and fail. The data-file rename alone
+    * is the atomic step, so the bytes it exposes are whole.
+    */
+  def read(fs: FileSystem, targetDir: Path, name: String): Option[String] = {
+    val bytes = fs match {
+      case c: ChecksumFileSystem => c.getRawFileSystem
+      case other => other
+    }
+    try Some(readFully(bytes, new Path(targetDir, name)))
     catch { case _: java.io.FileNotFoundException => None }
+  }
 
   /** Prefix of [[RenamePointer.replace]]'s tmp files; the store's GC
     * sweep removes crash-orphaned ones.

@@ -23,22 +23,34 @@ import graft.sources.ParquetSegments
   *   _LOCK                         # cross-JVM writer lock (create-if-absent)
   *   manifest-<batch>-<nonce>      # "v2 buckets=N" + lines "<bucket>\t<seg>;<seg>..."
   *   data-<batch>-<nonce>/         # one publish's parquet output
-  *     __bucket=K/part-*.parquet   # one key-range bucket's segment
+  *     L0/part-*.parquet           # L0: a micro-batch's whole delta, sorted by
+  *                                 #   (__bucket, keys), __bucket kept as a column
+  *     __bucket=K/part-*.parquet   # L1: one bucket's segment (fold, full write)
   * }}}
   *
   * A row lives in bucket `pmod(xxhash64(keys), N)`; each bucket is a CHAIN
   * of segments (parquet dirs carrying op + sequenceNumber). A micro-batch
-  * merge APPENDS the compacted delta as one new segment per touched bucket
-  * — per-batch write is O(|delta|), never O(|touched bucket contents|), so
-  * a batch whose keys span every bucket (the uniform-hash common case)
-  * still writes only its own rows. Readers resolve a key's state by the
-  * same LWW rule the engine uses everywhere: per-key max sequence across
-  * the chain wins; a winning DELETE means absent ([[readTarget]]). Read
-  * amplification is bounded: a bucket whose chain would exceed
-  * [[FoldThreshold]] is FOLDED during that batch's publish (its chain is
-  * compacted to a single applied-state segment), amortizing O(bucket)/
-  * FoldThreshold per batch — the same base-plus-delta-log design as
-  * merge-on-read lakehouse tables. [[compactTarget]] folds every bucket.
+  * merge APPENDS the compacted delta as ONE L0 segment — one file per
+  * partition of the delta, no shuffle — and appends that same entry to
+  * every touched bucket's chain: per-batch write is O(|delta|) in one
+  * job, never O(|touched bucket contents|) and never one file per
+  * touched bucket. An L0 entry is SHARED by the buckets whose chains list
+  * it, and a row of it is visible only through a bucket whose chain lists
+  * it (the row's own `__bucket`): after a partial fold, a folded bucket's
+  * stale rows stay in the shared L0 but no chain exposes them. Every
+  * reader goes through one bucket-filtered read ([[readChains]] on the
+  * Spark side, `ParquetSegments.RowGroupIterator` on the parquet-mr
+  * side). Readers resolve a key's state by the same LWW rule the engine
+  * uses everywhere: per-key max sequence across the chain wins; a
+  * winning DELETE means absent ([[readTarget]]). Read amplification is
+  * bounded: a bucket whose chain would exceed [[FoldThreshold]] is FOLDED
+  * during that batch's publish (its chain is compacted to a single
+  * applied-state L1 segment), amortizing O(bucket)/FoldThreshold per
+  * batch — the same base-plus-delta-log design as merge-on-read
+  * lakehouse tables and LSM trees. [[compactTarget]] folds every bucket;
+  * [[writeTarget]] and compaction write L1 only. Chains written before L0
+  * existed (all `__bucket=K` entries) read unchanged, and one chain may
+  * mix both forms.
   *
   * All paths go through `org.apache.hadoop.fs.FileSystem`; publication
   * commits through a pluggable [[CommitProtocol]] so the atomic step
@@ -74,10 +86,12 @@ import graft.sources.ParquetSegments
   *     deliberately non-atomic filesystem).
   *
   * GC is pointer-derived, never recency-derived: after a successful swap,
-  * everything not referenced by the NEW manifest or the manifest that was
-  * live just before it (the grace window for in-flight readers) is deleted
-  * — at `__bucket=K` granularity, because an old data dir often stays
-  * partially live through reuse-by-reference.
+  * everything not referenced by a retained manifest (the new one, the
+  * one live just before it — the grace window for in-flight readers —
+  * and the `retainVersions` window) is deleted — at `__bucket=K` / `L0`
+  * granularity, because an old data dir often stays partially live
+  * through reuse-by-reference; an L0 lives while any retained manifest
+  * lists it in any chain.
   */
 object SnapshotStore {
 
@@ -87,8 +101,47 @@ object SnapshotStore {
   /** Cross-JVM writer lock file (create-if-absent; stale-broken). */
   val LockFile = "_LOCK"
 
-  /** Partition column used for the bucket layout (dropped on read). */
+  /** Bucket column: the partition column of L1 segment dirs, a physical
+    * column of L0 segment files; dropped on read either way.
+    */
   val BucketCol = "__bucket"
+
+  /** Name of a data dir's L0 segment (see the class doc). */
+  val L0Dir = "L0"
+
+  /** True for an L0 chain entry (relative or absolute). */
+  def isL0(seg: String): Boolean = seg.endsWith(s"/$L0Dir")
+
+  /** Zone-map key of chain entry `seg` in bucket `b`: L0 stats are kept
+    * per (segment, bucket), since one L0 serves many buckets.
+    */
+  private[graft] def zoneKey(seg: String, b: Int): String =
+    if (isL0(seg)) s"$seg#$b" else seg
+
+  /** Job-description labels of the apply path's phases. Each phase's
+    * jobs run under `<Spark's batch description>: <label>` (see
+    * [[inPhase]]), so any `SparkListener` can attribute a job to its
+    * phase from `spark.job.description`.
+    */
+  object Phase {
+    val BatchCheckpoint = "batch checkpoint"
+    val DeadLetter = "dead-letter write"
+    val DeltaCheckpoint = "delta checkpoint"
+    val L0Write = "L0 write"
+    val Fold = "fold"
+    val Commit = "metadata commit"
+  }
+
+  /** Run `body` with `label` appended to the thread's job description,
+    * then restore the previous description (Spark's per-batch one, when
+    * a streaming batch is running).
+    */
+  private[graft] def inPhase[A](spark: SparkSession, label: String)(body: => A): A = {
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(Option(prev).fold(label)(p => s"$p: $label"))
+    try body finally sc.setJobDescription(prev)
+  }
 
   /** Default bucket count — matches local shuffle parallelism; a 100 TB
     * target wants ~4096 (see class doc). Fixed at table creation and
@@ -517,9 +570,9 @@ object SnapshotStore {
                                buckets: Option[Set[Int]] = None,
                                rowFilter: DataFrame => DataFrame = identity)
       : DataFrame = {
-    val paths = m.buckets.toSeq.sortBy(_._1)
+    val chains = m.buckets.toSeq.sortBy(_._1)
       .filter { case (b, _) => buckets.forall(_.contains(b)) }
-      .flatMap(_._2).map(rel => new Path(targetDir, rel))
+    val paths = chains.flatMap(_._2).distinct.map(rel => new Path(targetDir, rel))
     val state = if (paths.isEmpty) emptyCanonical(spark, keys) else {
       val fs = fsOf(spark, targetDir)
       // fail-loud existence check with ONE listStatus per data dir (a
@@ -537,14 +590,44 @@ object SnapshotStore {
       }
       // mergeSchema: segments can span schema vintages (e.g. a
       // pre-seeded snapshot merged incrementally); footer-only cost
-      val df = rowFilter(spark.read.option("mergeSchema", "true")
-        .parquet(paths.map(_.toString): _*))
+      val merged = spark.read.option("mergeSchema", "true")
+        .parquet(paths.map(_.toString): _*).schema
+      val df = rowFilter(readChains(spark, targetDir, chains,
+        org.apache.spark.sql.types.StructType(merged.filterNot(_.name == BucketCol))))
       // metadata-less table (pure writeTarget publish): already state
       if (!df.columns.contains("op")) df
       else if (keepMarkers) compactMarkers(df, keys)
       else compactState(df, keys).drop("op")
     }
     if (keepMarkers) withPutOp(state) else state
+  }
+
+  /** The raw rows of `chains` (bucket -> segment chain) as `schema` — the
+    * one Spark read of chain segments, used by [[readManifestData]] and
+    * the fold. L1 segments are whole buckets and are read as they are;
+    * each distinct L0 segment is read ONCE, filtered to
+    * `__bucket ∈ {buckets whose chain here lists it}` (the visibility
+    * rule: a shared L0's rows of any other bucket are stale or belong to
+    * a chain not being read), and the bucket column is dropped. At most
+    * the discovery threshold of roots per read keeps Spark's file listing
+    * on the driver instead of a listing job.
+    */
+  private def readChains(spark: SparkSession, targetDir: String,
+                         chains: Seq[(Int, Seq[String])],
+                         schema: org.apache.spark.sql.types.StructType): DataFrame = {
+    val entries = chains.flatMap { case (b, segs) => segs.map(_ -> b) }
+    val (l0, l1) = entries.partition { case (seg, _) => isL0(seg) }
+    def full(rel: String) = new Path(targetDir, rel).toString
+    val perBucket = l1.map(_._1).distinct.map(full)
+      .grouped(math.max(1, spark.sessionState.conf.parallelPartitionDiscoveryThreshold))
+      .map(ps => spark.read.schema(schema).parquet(ps: _*)).toSeq
+    val withBucket = schema.add(BucketCol, org.apache.spark.sql.types.IntegerType)
+    val shared = l0.groupBy(_._1).toSeq.sortBy(_._1).map { case (seg, bs) =>
+      spark.read.schema(withBucket).parquet(full(seg))
+        .filter(col(BucketCol).isin(bs.map(_._2).distinct.sorted: _*))
+        .select(schema.fieldNames.toSeq.map(col): _*)
+    }
+    (perBucket ++ shared).reduce(_ union _)
   }
 
   /** Committed-version journal file: one manifest name per line,
@@ -822,16 +905,17 @@ object SnapshotStore {
     }
 
   /** Delete everything not referenced by the retained manifests, at
-    * bucket-subdir granularity (an old `data-*` dir stays alive as long as
-    * ANY retained manifest still references one of its segments).
+    * segment-subdir granularity (an old `data-*` dir stays alive as long
+    * as ANY retained manifest still references one of its segments, and
+    * an `L0` while any retained chain lists it).
     */
   private def gc(fs: FileSystem, targetDir: String, retainManifests: Set[String],
                  retainData: Set[String]): Unit = {
     val root = new Path(targetDir)
-    // referenced relpaths look like "data-x/__bucket=3" (or, for a
-    // clustered publish, "data-x/__bucket=3/zs=5"): group by top dir and
-    // compare at the BUCKET-dir level — a clustered bucket's slices are
-    // always referenced together (one atomic publish), so keeping the
+    // referenced relpaths look like "data-x/L0", "data-x/__bucket=3" (or,
+    // for a clustered publish, "data-x/__bucket=3/zs=5"): group by top dir
+    // and compare at the SEGMENT-dir level — a clustered bucket's slices
+    // are always referenced together (one atomic publish), so keeping the
     // whole bucket dir when any of its slices is live is exact
     val liveByDir = retainData.map { rel =>
       val Array(top, sub) = rel.split("/", 2); (top, sub.split("/")(0))
@@ -847,83 +931,117 @@ object SnapshotStore {
           case None => fs.delete(st.getPath, true); ()
           case Some(liveSubs) =>
             fs.listStatus(st.getPath)
-              .filter(c => c.isDirectory && c.getPath.getName.startsWith(s"$BucketCol=") &&
-                !liveSubs.contains(c.getPath.getName))
+              .filter { c =>
+                val cn = c.getPath.getName
+                c.isDirectory && (cn == L0Dir || cn.startsWith(s"$BucketCol=")) &&
+                  !liveSubs.contains(cn)
+              }
               .foreach(c => fs.delete(c.getPath, true))
         }
       }
     }
   }
 
-  /** Write `data`'s buckets as a fresh data dir and commit a manifest of
-    * `keepChains` (untouched buckets, verbatim) plus, for every bucket
-    * this publish materialized, `prefixChains(bucket) :+ <new segment>`
-    * (append mode; an absent prefix = the segment stands alone — the
-    * fold / full-write case). A prefix bucket that materializes nothing
-    * was folded to empty (every key deleted) and drops from the manifest.
+  /** Write a fresh data dir and commit a manifest of `keepChains`
+    * (untouched buckets, verbatim) plus what this publish wrote:
+    *  - `l1` (rows carrying [[BucketCol]]): one L1 segment per bucket it
+    *    materializes, each standing alone as that bucket's new chain —
+    *    the fold / full-write case. A bucket of `keepChains` or
+    *    `prefixChains` must not appear in it.
+    *  - `l0` (the same shape, each partition sorted by (bucket, keys),
+    *    and its row count): ONE L0 segment written as the frame is
+    *    partitioned — no shuffle, one job — appended to `prefixChains(b)`
+    *    for every bucket `b` of `prefixChains`, which must be exactly the
+    *    buckets of its rows. Its parquet pages hold about one bucket's
+    *    share of the rows each, so the page index lets a reader of one
+    *    bucket decode about two pages instead of the whole file, and the
+    *    index stays at about one entry per bucket whatever the delta's
+    *    size.
     * Callers hold the target lock and pass the basis their chains came
     * from.
     */
-  private def publish(spark: SparkSession, targetDir: String, data: DataFrame,
+  private def publish(spark: SparkSession, targetDir: String, l1: Option[DataFrame],
                       keepChains: Map[Int, Seq[String]],
-                      prefixChains: Map[Int, Seq[String]],
                       basis: Option[String],
                       batchId: Long, numBuckets: Int,
                       retainVersions: Int = 2,
-                      sliceCol: Option[String] = None): Unit = {
+                      sliceCol: Option[String] = None,
+                      l0: Option[(DataFrame, Long)] = None,
+                      prefixChains: Map[Int, Seq[String]] = Map.empty): Unit = {
     val fs = fsOf(spark, targetDir)
     fs.mkdirs(new Path(targetDir))
     // nonce so a retried batch never collides with its failed attempt's dir
     val nonce = System.nanoTime().toHexString
     val dataName = f"data-$batchId%012d-$nonce"
-    // whole buckets per task → one file per touched bucket per publish;
-    // a clustered publish (r16) additionally splits each bucket into
-    // its slice subdirs — one SEGMENT per (bucket, slice), so the
-    // reader's per-segment zone maps can exclude within a bucket. The
-    // explicit width writes buckets in parallel: a count-less
-    // repartition of a one-file delta is coalesced by AQE to one task.
+    val dataDir = new Path(targetDir, dataName)
+    // L1 first (its writer creates the data dir): whole buckets per task
+    // → one file per bucket; a clustered publish (r16) additionally
+    // splits each bucket into its slice subdirs — one SEGMENT per
+    // (bucket, slice), so the reader's per-segment zone maps can exclude
+    // within a bucket. The explicit width writes buckets in parallel: a
+    // count-less repartition of a one-file delta is coalesced by AQE to
+    // one task.
     val width = math.max(1, math.min(numBuckets, spark.sessionState.conf.numShufflePartitions))
-    sliceCol match {
-      case Some(zs) =>
-        data.repartition(width, col(BucketCol), col(zs))
-          .write.partitionBy(BucketCol, zs)
-          .parquet(new Path(targetDir, dataName).toString)
-      case None =>
-        data.repartition(width, col(BucketCol))
-          .write.partitionBy(BucketCol)
-          .parquet(new Path(targetDir, dataName).toString)
-    }
-    // empty buckets write no dir: the manifest simply drops them
-    val written: Map[Int, Seq[String]] = fs
-      .listStatus(new Path(targetDir, dataName))
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(s"$BucketCol="))
-      .map { s =>
-        val b = s.getPath.getName.stripPrefix(s"$BucketCol=").toInt
-        val segs = sliceCol match {
-          case Some(zs) => fs.listStatus(s.getPath)
-            .filter(c => c.isDirectory && c.getPath.getName.startsWith(s"$zs="))
-            .map(c => s"$dataName/${s.getPath.getName}/${c.getPath.getName}")
-            .sortBy(identity).toSeq
-          case None => Seq(s"$dataName/${s.getPath.getName}")
+    val written: Map[Int, Seq[String]] = l1.fold(Map.empty[Int, Seq[String]]) { data =>
+      inPhase(spark, Phase.Fold) {
+        sliceCol match {
+          case Some(zs) =>
+            data.repartition(width, col(BucketCol), col(zs))
+              .write.partitionBy(BucketCol, zs).parquet(dataDir.toString)
+          case None =>
+            data.repartition(width, col(BucketCol))
+              .write.partitionBy(BucketCol).parquet(dataDir.toString)
         }
-        b -> segs
-      }.toMap
-    val chains = keepChains ++ written.map { case (b, paths) =>
-      b -> (prefixChains.getOrElse(b, Nil) ++ paths)
+      }
+      // empty buckets write no dir: the manifest simply drops them
+      fs.listStatus(dataDir)
+        .filter(s => s.isDirectory && s.getPath.getName.startsWith(s"$BucketCol="))
+        .map { s =>
+          val b = s.getPath.getName.stripPrefix(s"$BucketCol=").toInt
+          val segs = sliceCol match {
+            case Some(zs) => fs.listStatus(s.getPath)
+              .filter(c => c.isDirectory && c.getPath.getName.startsWith(s"$zs="))
+              .map(c => s"$dataName/${s.getPath.getName}/${c.getPath.getName}")
+              .sortBy(identity).toSeq
+            case None => Seq(s"$dataName/${s.getPath.getName}")
+          }
+          b -> segs
+        }.toMap
     }
+    val l0Seg = s"$dataName/$L0Dir"
+    l0.foreach { case (df, rows) =>
+      val pageRows = math.max(1L, (rows + prefixChains.size - 1) / math.max(1, prefixChains.size))
+      inPhase(spark, Phase.L0Write)(df.write
+        .option("parquet.page.row.count.limit", pageRows.toString)
+        .parquet(new Path(targetDir, l0Seg).toString))
+    }
+    val appended = if (l0.isEmpty) Map.empty[Int, Seq[String]]
+      else prefixChains.map { case (b, prefix) => b -> (prefix :+ l0Seg) }
+    val chains = keepChains ++ written ++ appended
     // zone maps (r13): fresh stats for this publish's segments, prior
     // stats carried forward for kept/prefix chains (they live in the
     // basis manifest — a dropped carry-forward would only cost pruning,
     // but carrying it keeps every retained version fully stat-covered)
-    val keptSegs = chains.values.flatten.toSet
+    val keptKeys = chains.toSeq.flatMap { case (b, segs) => segs.map(zoneKey(_, b)) }.toSet
     val priorZm = basis
       .flatMap(bn => manifestNamed(spark, targetDir, bn))
       .map(_.zoneMaps).getOrElse(Map.empty)
-      .filter { case (seg, _) => keptSegs(seg) }
-    val freshZm = zoneStatsFor(spark, new Path(targetDir, dataName).toString,
-      dataName, written.values.flatten.toSet, sliceCol,
-      graft.sources.SnapshotProjectedColumns.read(fs.getConf, targetDir))
-    val manifest = Manifest(numBuckets, chains, priorZm ++ freshZm)
+      .filter { case (seg, _) => keptKeys(seg) }
+    val projCols = graft.sources.SnapshotProjectedColumns.read(fs.getConf, targetDir)
+    val l1Segs = written.values.flatten.toSeq
+    val (l1Zm, l0Zm) = inPhase(spark, Phase.Commit) {
+      (if (l1Segs.isEmpty) Map.empty[String, Seq[ZoneStat]]
+       else zoneStatsFor(spark.read.option("basePath", dataDir.toString)
+         .parquet(l1Segs.map(seg => new Path(targetDir, seg).toString): _*),
+         BucketCol +: sliceCol.toSeq, projCols) { (b, zs) =>
+           sliceCol.fold(s"$dataName/$BucketCol=$b")(c => s"$dataName/$BucketCol=$b/$c=${zs.get}")
+         },
+       if (appended.isEmpty) Map.empty[String, Seq[ZoneStat]]
+       else zoneStatsFor(spark.read.parquet(new Path(targetDir, l0Seg).toString),
+         Seq(BucketCol), projCols)((b, _) => zoneKey(l0Seg, b)))
+    }
+    val manifest = Manifest(numBuckets, chains,
+      priorZm ++ (l1Zm ++ l0Zm).filter { case (k, _) => keptKeys(k) })
     val manifestName = f"manifest-$batchId%012d-$nonce"
     writeFile(fs, new Path(targetDir, manifestName), renderManifest(manifest))
     casSwapPointer(spark, targetDir, manifestName, basis)
@@ -960,30 +1078,30 @@ object SnapshotStore {
   }
 
   /** Per-written-segment projected-column stats for the zone maps
-    * (r13): one extra aggregate over this publish's OWN rows — min/max/
-    * non-null count per (bucket, projected column), extracted with the
-    * READ PATH's exact JSON semantics (JsonProjection's UDF face), so a
-    * stat can never disagree with what a scan would materialize. The
-    * collect is ≤ |touched buckets| rows (control-plane class). Zero
-    * cost when the table has no projected columns — the method returns
-    * before touching the data. Only the canonical `newImage` layout
-    * gets stats (custom payload layouts have no projected columns).
+    * (r13): one extra aggregate over this publish's OWN rows, read BACK
+    * from the just-written `segments` (re-evaluating the publish lineage
+    * would re-read whole chains on a fold path) — min/max/non-null count
+    * per `grpCols` group (the bucket, plus the slice column of a
+    * clustered publish), extracted with the READ PATH's exact JSON
+    * semantics (JsonProjection's UDF face), so a stat can never disagree
+    * with what a scan would materialize. `keyOf(bucket, slice)` names a
+    * group's zone-map key. The collect is ≤ |touched buckets| rows
+    * (control-plane class). Zero cost when the table has no projected
+    * columns — the method returns before touching the data. Only the
+    * canonical `newImage` layout gets stats (custom payload layouts have
+    * no projected columns).
     */
-  private def zoneStatsFor(spark: SparkSession, dataDir: String,
-                           dataName: String, writtenSegs: Set[String],
-                           sliceCol: Option[String],
+  private def zoneStatsFor(segments: => DataFrame, grpCols: Seq[String],
                            projCols: Seq[org.apache.spark.sql.types.StructField])
+                          (keyOf: (Int, Option[Int]) => String)
       : Map[String, Seq[ZoneStat]] = {
     import org.apache.spark.sql.types._
     val usable = projCols.filter(f => Seq[DataType](LongType, IntegerType,
       DoubleType, BooleanType, StringType).contains(f.dataType))
-    if (usable.isEmpty || writtenSegs.isEmpty) return Map.empty
-    // read BACK the just-written segments rather than re-evaluating the
-    // publish lineage (a fold path's lineage re-reads whole chains);
+    if (usable.isEmpty) return Map.empty
     // column pruning makes this one newImage-column pass over the new
-    // files only, and BucketCol (plus the slice column for a clustered
-    // publish) comes back as a partition column
-    val data = spark.read.parquet(dataDir)
+    // files only
+    val data = segments
     if (!data.columns.contains("newImage")) return Map.empty
     val exCols = usable.map { f =>
       graft.sources.JsonProjection.extractUdf(f.name, f.dataType)(
@@ -994,30 +1112,23 @@ object SnapshotStore {
         max(col(s"z_${f.name}")).as(s"mx_${f.name}"),
         count(col(s"z_${f.name}")).as(s"nn_${f.name}"))
     }
-    val grpCols = Seq(col(BucketCol)) ++ sliceCol.map(col)
-    val rows = data.select(grpCols ++ exCols: _*)
-      .groupBy(grpCols: _*).agg(aggs.head, aggs.tail: _*)
+    val rows = data.select(grpCols.map(col) ++ exCols: _*)
+      .groupBy(grpCols.map(col): _*).agg(aggs.head, aggs.tail: _*)
       .collect()
-    rows.flatMap { r =>
-      val b = r.getInt(r.fieldIndex(BucketCol))
-      val seg = sliceCol match {
-        case Some(zs) =>
-          s"$dataName/$BucketCol=$b/$zs=${r.getInt(r.fieldIndex(zs))}"
-        case None => s"$dataName/$BucketCol=$b"
-      }
-      if (!writtenSegs(seg)) None
-      else Some(seg -> usable.map { f =>
-        val mn = r.get(r.fieldIndex(s"mn_${f.name}"))
-        val mx = r.get(r.fieldIndex(s"mx_${f.name}"))
-        val nn = r.getLong(r.fieldIndex(s"nn_${f.name}"))
-        ZoneStat(f.name, f.dataType.catalogString, allNull = nn == 0L,
-          Option(mn).map(_.toString), Option(mx).map(_.toString))
-      })
+    rows.map { r =>
+      keyOf(r.getInt(0), grpCols.lift(1).map(c => r.getInt(r.fieldIndex(c)))) ->
+        usable.map { f =>
+          val mn = r.get(r.fieldIndex(s"mn_${f.name}"))
+          val mx = r.get(r.fieldIndex(s"mx_${f.name}"))
+          val nn = r.getLong(r.fieldIndex(s"nn_${f.name}"))
+          ZoneStat(f.name, f.dataType.catalogString, allNull = nn == 0L,
+            Option(mn).map(_.toString), Option(mx).map(_.toString))
+        }
     }.toMap
   }
 
   /** Full (non-pruned) publish of `df` as the new table state — the seed /
-    * compaction path (every bucket becomes a single-segment chain).
+    * compaction path (every bucket becomes a single L1 segment).
     * Bucket count comes from the live manifest when one exists (the
     * table's N is fixed), else `numBuckets`.
     */
@@ -1029,18 +1140,20 @@ object SnapshotStore {
     withTargetLock(spark, targetDir) {
       val basis = currentManifest(spark, targetDir)
       val n = basis.map(_._2.numBuckets).getOrElse(numBuckets)
-      publish(spark, targetDir, df.withColumn(BucketCol, bucketExpr(keys, n)),
-        keepChains = Map.empty, prefixChains = Map.empty,
-        basis = basis.map(_._1), batchId, n, retainVersions)
+      publish(spark, targetDir, Some(df.withColumn(BucketCol, bucketExpr(keys, n))),
+        keepChains = Map.empty, basis = basis.map(_._1), batchId, n, retainVersions)
     }
   }
 
   /** The O(|delta|) merge — the streaming sink's per-batch apply. The
-    * compacted delta is APPENDED as one new segment per touched bucket:
-    * no existing bucket content is read or rewritten, so per-batch I/O is
-    * the delta's own rows even when the delta's keys span every bucket.
-    * Buckets whose chain would exceed [[FoldThreshold]] are folded in the
-    * same publish (chain + delta compacted to one applied-state segment),
+    * compacted delta is APPENDED as one L0 segment — one file per
+    * partition of the checkpointed delta, sorted by (bucket, keys), in
+    * one write job with no shuffle — and that entry is appended to every
+    * touched bucket's chain: no existing bucket content is read or
+    * rewritten, so per-batch I/O is the delta's own rows even when the
+    * delta's keys span every bucket. Buckets whose chain would exceed
+    * [[FoldThreshold]] are folded in the same publish instead (chain +
+    * delta compacted to one applied-state L1 segment per bucket),
     * bounding read amplification; every publish commits through the
     * locked CAS swap.
     *
@@ -1070,9 +1183,12 @@ object SnapshotStore {
           // trigger would otherwise accumulate one pinned block set per
           // batch). One Observation per call: a retry needs a fresh one.
           val touchedSeen = Observation()
-          val d = delta.withColumn(BucketCol, bucketExpr(keys, n))
-            .observe(touchedSeen, collect_set(col(BucketCol)).as("touched"))
-            .localCheckpoint(true)
+          val d = inPhase(spark, Phase.DeltaCheckpoint) {
+            delta.withColumn(BucketCol, bucketExpr(keys, n))
+              .observe(touchedSeen, collect_set(col(BucketCol)).as("touched"),
+                count(lit(1)).as("rows"))
+              .localCheckpoint(true)
+          }
           try {
             val touched = touchedSeen.get("touched")
               .asInstanceOf[scala.collection.Seq[Int]].toSet
@@ -1098,42 +1214,40 @@ object SnapshotStore {
               val foldSet = touched.filter(b =>
                 m.buckets.getOrElse(b, Nil).length + 1 > foldThreshold)
               val appendSet = touched -- foldSet
-              val appendRows = d.filter(col(BucketCol).isin(appendSet.toSeq: _*))
-                .select(outCols :+ col(BucketCol): _*)
+              def rowsOf(bs: Set[Int]) =
+                if (bs == touched) d else d.filter(col(BucketCol).isin(bs.toSeq: _*))
+              // the L0 rows stay as the checkpoint partitioned them; the
+              // in-partition sort clusters each bucket's rows for the
+              // readers' bucket filter
+              val appendRows =
+                if (appendSet.isEmpty) None
+                else Some(rowsOf(appendSet).select(outCols :+ col(BucketCol): _*)
+                  .sortWithinPartitions((col(BucketCol) +: keys.map(col)): _*) ->
+                  touchedSeen.get("rows").asInstanceOf[Long] * appendSet.size / touched.size)
               val folded =
-                if (foldSet.isEmpty) appendRows.limit(0)
-                else {
-                  // non-empty by construction: foldSet membership requires
-                  // an existing chain of >= FoldThreshold segments
-                  val chainPaths = foldSet.toSeq.sorted
-                    .flatMap(b => m.buckets.getOrElse(b, Nil))
-                    .map(rel => new Path(targetDir, rel).toString)
+                if (foldSet.isEmpty) None
+                else Some {
                   // read with the delta's schema, no footer merge: a
                   // segment of an older vintage (a metadata-less seed)
                   // reads its missing op/sequence columns as null — null
-                  // op counts as PUT, null sequence loses. At most the
-                  // discovery threshold of roots per read keeps Spark's
-                  // file listing on the driver instead of a listing job.
+                  // op counts as PUT, null sequence loses
                   val segSchema = org.apache.spark.sql.types.StructType(
                     outNames.map(c => d.schema(c).copy(nullable = true)))
-                  val existing = chainPaths
-                    .grouped(math.max(1, spark.sessionState.conf.parallelPartitionDiscoveryThreshold))
-                    .map(ps => spark.read.schema(segSchema).parquet(ps: _*))
-                    .reduce(_ union _)
-                    .select(outCols: _*)
+                  val existing = readChains(spark, targetDir,
+                    foldSet.toSeq.sorted.map(b => b -> m.buckets.getOrElse(b, Nil)),
+                    segSchema)
                   // fold with MARKERS retained (see compactMarkers): the
                   // folded segment keeps dead keys' sequence guards
                   compactMarkers(
-                    existing.unionByName(
-                      d.filter(col(BucketCol).isin(foldSet.toSeq: _*)).select(outCols: _*)),
-                    keys)
+                    existing.unionByName(rowsOf(foldSet).select(outCols: _*)), keys)
                     .withColumn(BucketCol, bucketExpr(keys, n))
                     .select(outCols :+ col(BucketCol): _*)
                 }
-              publish(spark, targetDir, appendRows.unionByName(folded),
+              publish(spark, targetDir, folded,
                 keepChains = m.buckets -- touched,
-                prefixChains = appendSet.map(b => b -> m.buckets.getOrElse(b, Nil)).toMap,
-                basis = Some(basisName), batchId, n, retainVersions)
+                basis = Some(basisName), batchId, n, retainVersions,
+                l0 = appendRows,
+                prefixChains = appendSet.map(b => b -> m.buckets.getOrElse(b, Nil)).toMap)
               // fold the stats forward onto the just-committed version;
               // best-effort — the merge is already durable, and a failed
               // fold leaves a stale pin that degrades fail-safe as before
@@ -1163,9 +1277,8 @@ object SnapshotStore {
           val merged = compactMarkers(
             seed.unionByName(delta.select(outCols: _*)), keys)
             .withColumn(BucketCol, bucketExpr(keys, numBuckets))
-          publish(spark, targetDir, merged,
-            keepChains = Map.empty, prefixChains = Map.empty,
-            basis = None, batchId, numBuckets, retainVersions)
+          publish(spark, targetDir, Some(merged),
+            keepChains = Map.empty, basis = None, batchId, numBuckets, retainVersions)
       }
     }
 
@@ -1280,8 +1393,8 @@ object SnapshotStore {
           val liveStats = graft.sources.SnapshotTableStats.read(
             hconf(spark), targetDir).filter(_.version == basisName)
           publish(spark, targetDir,
-            state.withColumn(BucketCol, bucketExpr(keys, m.numBuckets)),
-            keepChains = Map.empty, prefixChains = Map.empty,
+            Some(state.withColumn(BucketCol, bucketExpr(keys, m.numBuckets))),
+            keepChains = Map.empty,
             basis = Some(basisName), batchId = -1L, m.numBuckets, retainVersions)
           liveStats.foreach { st =>
             try pointerValue(spark, targetDir).foreach(v =>
@@ -1393,8 +1506,8 @@ object SnapshotStore {
             .select((stateCols.map(col) :+ col(BucketCol) :+ col("zs")): _*)
           val liveStats = graft.sources.SnapshotTableStats.read(
             hconf(spark), targetDir).filter(_.version == basisName)
-          publish(spark, targetDir, clustered,
-            keepChains = Map.empty, prefixChains = Map.empty,
+          publish(spark, targetDir, Some(clustered),
+            keepChains = Map.empty,
             basis = Some(basisName), batchId = -1L, m.numBuckets,
             retainVersions, sliceCol = Some("zs"))
           liveStats.foreach { st =>
@@ -1441,8 +1554,8 @@ object SnapshotStore {
             val expired = state.count() - keep.count()
             if (expired > 0)
               publish(spark, targetDir,
-                keep.withColumn(BucketCol, bucketExpr(keys, m.numBuckets)),
-                keepChains = Map.empty, prefixChains = Map.empty,
+                Some(keep.withColumn(BucketCol, bucketExpr(keys, m.numBuckets))),
+                keepChains = Map.empty,
                 basis = Some(basisName), batchId = -2L, m.numBuckets, retainVersions)
             expired
           } finally { state.unpersist(); () }
@@ -1452,9 +1565,10 @@ object SnapshotStore {
   /** One-row operational report of a target's physical layout — the
     * observability surface a store operator watches to time compactions
     * and validate fold behavior: bucket count, populated buckets, total
-    * segments, the longest chain (the read-amplification worst case),
-    * and total data bytes. Metadata-only (manifest parse + file
-    * statuses), no data scan.
+    * segments (distinct segment dirs: a shared L0 counts once), the
+    * longest chain (the read-amplification worst case, in chain
+    * entries), and total data bytes (each segment once). Metadata-only
+    * (manifest parse + file statuses), no data scan.
     */
   final case class StoreStats(numBuckets: Int, populatedBuckets: Int,
                               totalSegments: Int, maxChainLength: Int,
@@ -1463,14 +1577,15 @@ object SnapshotStore {
   def storeStats(spark: SparkSession, targetDir: String): Option[StoreStats] =
     currentManifest(spark, targetDir).map { case (_, m) =>
       val fs = fsOf(spark, targetDir)
-      val bytes = m.buckets.values.flatten.toSet[String].toSeq.map { rel =>
+      val segs = m.buckets.values.flatten.toSet[String].toSeq
+      val bytes = segs.map { rel =>
         val p = new Path(targetDir, rel)
         try fs.getContentSummary(p).getLength catch { case _: java.io.IOException => 0L }
       }.sum
       StoreStats(
         numBuckets = m.numBuckets,
         populatedBuckets = m.buckets.size,
-        totalSegments = m.buckets.values.map(_.size).sum,
+        totalSegments = segs.size,
         maxChainLength = if (m.buckets.isEmpty) 0 else m.buckets.values.map(_.size).max,
         dataBytes = bytes,
         retainedVersions = versions(spark, targetDir).length)
@@ -1478,9 +1593,11 @@ object SnapshotStore {
 
   /** Write-amplification report (r13): how much SUPERSEDED history the
     * live version drags — rawRows (every delta row across the current
-    * manifest's chains, from parquet FOOTER record counts: metadata-
-    * only, no data scan) vs resolvedRows (the LWW-live state, one
-    * resolve pass), with amplification in exact ppm. The operator
+    * manifest's segments, each segment once, from parquet FOOTER record
+    * counts: metadata-only, no data scan; a shared L0's rows of a folded
+    * bucket count too — readers still skip past them) vs resolvedRows
+    * (the LWW-live state, one resolve pass), with amplification in exact
+    * ppm. The operator
     * signal that times compaction: a ratio near 1e6 means chains are
     * mostly live; a high ratio means folds are overdue (every read
     * replays rows that can never win). The spec drives overwrite waves
@@ -1583,7 +1700,8 @@ object SnapshotStore {
         } finally in.close()
       }
     }
-    // a segment path is a bucket DIRECTORY of parquet part files
+    // a segment path is a DIRECTORY of parquet part files; a shared L0
+    // is listed by many chains and copied once
     m.buckets.values.flatten.toSet[String].foreach { rel =>
       val to = new Path(dstDir, rel)
       fs.mkdirs(to.getParent)

@@ -11,10 +11,11 @@ import org.apache.spark.sql.streaming.Trigger
 
 import graft.streaming.{CdcStream, SnapshotStore}
 
-/** The job shape of the CDC apply sink's non-folding micro-batch: the
-  * publish writes its bucket segments in more than one task, the poison
-  * count and touched-bucket set cost no jobs of their own, and the
-  * dead-letter queue (DLQ) is written only when a batch holds poison.
+/** The job shape of the CDC apply sink's non-folding micro-batch: every
+  * job carries its phase label, the publish writes one L0 segment in one
+  * job with no shuffle, the poison count and touched-bucket set cost no
+  * jobs of their own, and the dead-letter queue (DLQ) is written only
+  * when a batch holds poison.
   */
 class ApplySinkJobShapeSpec extends SparkSpec {
 
@@ -31,38 +32,48 @@ class ApplySinkJobShapeSpec extends SparkSpec {
       s""""sequenceNumber":"$seq","keys":"$keys","newImage":$imgJson,"oldImage":null}"""
   }
 
-  /** Jobs per micro-batch, and the task count of each stage that both
-    * read a shuffle and wrote files (the publish's segment write; the
-    * DLQ write reads no shuffle).
+  /** Jobs per micro-batch with their phase labels (the suffix of the job
+    * description), and per batch the publish's L0 write jobs and the
+    * shuffle records their stages read.
     */
   private class SinkRecorder extends SparkListener {
-    val jobs = new ConcurrentHashMap[Long, Integer]()
+    val jobs = new ConcurrentHashMap[Long, java.util.List[String]]()
     val stageBatch = new ConcurrentHashMap[Int, Long]()
-    val publishWriteTasks = new ConcurrentHashMap[Long, Integer]()
+    val l0ShuffleRead = new ConcurrentHashMap[Long, java.lang.Long]()
     override def onJobStart(e: SparkListenerJobStart): Unit =
       Option(e.properties).flatMap(p => Option(p.getProperty("streaming.sql.batchId")))
         .map(_.toLong).foreach { b =>
-          jobs.merge(b, 1, (a, c) => a + c)
-          e.stageIds.foreach(stageBatch.put(_, b))
+          val desc = Option(e.properties.getProperty("spark.job.description")).getOrElse("")
+          val phase = Phases.find(ph => desc.endsWith(s": $ph")).getOrElse(s"unlabelled: $desc")
+          jobs.computeIfAbsent(b, _ => new java.util.concurrent.CopyOnWriteArrayList[String]())
+            .add(phase)
+          if (phase == SnapshotStore.Phase.L0Write) {
+            l0ShuffleRead.putIfAbsent(b, 0L)
+            e.stageIds.foreach(stageBatch.put(_, b))
+          }
         }
     override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
       val i = e.stageInfo
-      val m = i.taskMetrics
-      if (m != null && m.outputMetrics.bytesWritten > 0 &&
-          m.shuffleReadMetrics.recordsRead > 0 && stageBatch.containsKey(i.stageId))
-        publishWriteTasks.merge(stageBatch.get(i.stageId), i.numTasks, (a, c) => math.max(a, c))
+      Option(i.taskMetrics).filter(_ => stageBatch.containsKey(i.stageId)).foreach(m =>
+        l0ShuffleRead.merge(stageBatch.get(i.stageId), m.shuffleReadMetrics.recordsRead,
+          (a, c) => a + c))
     }
+  }
+
+  private val Phases = {
+    import SnapshotStore.Phase._
+    Seq(BatchCheckpoint, DeadLetter, DeltaCheckpoint, L0Write, Fold, Commit)
   }
 
   // Jobs of a non-folding micro-batch: the batch's checkpoint (poison
   // count observed on it), the compacted delta's checkpoint (dedup and
-  // LWW shuffles, touched buckets observed on it), the publish's
-  // repartition and write; plus the DLQ write when the batch has poison.
-  private val MaxJobsClean = 6
-  private val MaxJobsPoison = 7
+  // LWW shuffles, touched buckets observed on it) and the L0 write; plus
+  // the DLQ write when the batch has poison.
+  private val MaxJobsClean = 5
+  private val MaxJobsPoison = 6
 
-  test("a non-folding micro-batch writes its buckets in parallel, runs no probe jobs, " +
-    "and dead-letters exactly the planted poison") {
+  test("a non-folding micro-batch labels every job by phase, writes one L0 segment " +
+    "in one shuffle-free job, runs no probe jobs, and dead-letters exactly the planted poison") {
     assert(spark.sparkContext.defaultParallelism >= 2, "needs local[>=2]")
     import spark.implicits._
     val in = tmp("shape-in"); val target = tmp("shape-target")
@@ -91,14 +102,26 @@ class ApplySinkJobShapeSpec extends SparkSpec {
       ListenerBusDrain.drain(spark.sparkContext)
     } finally spark.sparkContext.removeSparkListener(recorder)
 
-    val jobs = recorder.jobs.asScala.map { case (b, n) => b -> n.intValue }.toMap
-    val writeTasks = recorder.publishWriteTasks.asScala.map { case (b, n) => b -> n.intValue }.toMap
-    info(s"jobs per batch $jobs; publish write tasks per batch $writeTasks")
+    val jobs = recorder.jobs.asScala.map { case (b, ps) => b -> ps.asScala.toList }.toMap
+    val l0Read = recorder.l0ShuffleRead.asScala.map { case (b, n) => b -> n.longValue }.toMap
+    info(s"job phases per batch $jobs; L0 write shuffle records read per batch $l0Read")
     assert(jobs.keySet == Set(0L, 1L), s"batches seen: $jobs")
-    assert(jobs(0L) <= MaxJobsClean, s"poison-free batch ran ${jobs(0L)} jobs")
-    assert(jobs(1L) <= MaxJobsPoison, s"batch with poison ran ${jobs(1L)} jobs")
-    assert(writeTasks.keySet == Set(0L, 1L), s"publish write stages seen: $writeTasks")
-    assert(writeTasks.values.forall(_ > 1), s"publish wrote in one task: $writeTasks")
+    assert(jobs.values.flatten.forall(Phases.contains), s"a sink job has no phase label: $jobs")
+    assert(jobs(0L).size <= MaxJobsClean, s"poison-free batch ran ${jobs(0L)}")
+    assert(jobs(1L).size <= MaxJobsPoison, s"batch with poison ran ${jobs(1L)}")
+    assert(jobs.values.forall(_.count(_ == SnapshotStore.Phase.L0Write) == 1),
+      s"the publish wrote in other than one job: $jobs")
+    assert(!jobs(0L).contains(SnapshotStore.Phase.DeadLetter), jobs)
+    assert(jobs(1L).count(_ == SnapshotStore.Phase.DeadLetter) == 1, jobs)
+    assert(l0Read == Map(0L -> 0L, 1L -> 0L), s"the L0 write read a shuffle: $l0Read")
+    // one L0 segment per batch, listed by every chain the batch touched
+    val segs = SnapshotStore.currentManifest(spark, target).get._2.buckets.values.flatten.toSet
+    val appended = segs.filter(SnapshotStore.isL0)
+    assert(appended.size == 2, segs)
+    assert((segs -- appended).map(_.split("/")(0)).size == 1, s"more than the seed's L1: $segs")
+    val dataDirs = appended.map(_.split("/")(0))
+    assert(dataDirs.forall(d => new java.io.File(target, d).list().toSet == Set(SnapshotStore.L0Dir)),
+      dataDirs.map(d => d -> new java.io.File(target, d).list().toSeq))
 
     val dead = spark.read.parquet(dlq).select("eventID", "batchId", "error").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSet

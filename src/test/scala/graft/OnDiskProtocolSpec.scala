@@ -41,6 +41,21 @@ class OnDiskProtocolSpec extends SparkSpec {
       assert(left.isEmpty, s"tmp files left behind: ${left.toSeq}")
     }
 
+  test("a pointer read between the data-file and checksum renames returns the new value") {
+    // the local checksummed filesystem renames `_CURRENT` and its `.crc`
+    // separately; restoring the older value's checksum freezes a reader
+    // in that window
+    val target = tmp("crc-race")
+    val dir = new Path(target)
+    val crc = new File(target, s".${SnapshotStore.CurrentPointer}.crc").toPath
+    val proto = new CommitProtocol.RenamePointer(spark.sparkContext.hadoopConfiguration)
+    proto.replace(fs, dir, SnapshotStore.CurrentPointer, "manifest-000000000001-a")
+    val olderCrc = Files.readAllBytes(crc)
+    proto.replace(fs, dir, SnapshotStore.CurrentPointer, "manifest-000000000002-bcdef")
+    Files.write(crc, olderCrc)
+    assert(SnapshotStore.pointerValue(spark, target).contains("manifest-000000000002-bcdef"))
+  }
+
   test("crash-orphaned metadata tmps are removed by the store's GC sweep") {
     import spark.implicits._
     val target = tmp("orphans")
